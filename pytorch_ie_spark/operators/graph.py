@@ -45,19 +45,11 @@ def graph_degree_stats(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_converged(
-    edges: DataFrame,
-    damping: float = 0.85,
-    tol: float = 1e-6,
-    max_iter: int = 50,
-) -> tuple[DataFrame, int]:
-    """PageRank iterated until max |Δpr| < tol; raises like
-    connected_components_star when max_iter sweeps don't converge (wrong
-    results must not come back silently). Returns (pr, n_sweeps).
-
-    The delta check is one max-aggregate per sweep (a scalar to the
-    driver); each sweep's frame is localCheckpoint-pinned so sweep k+1 and
-    the delta probe don't replay sweeps 1..k."""
+def _pinned_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(distinct edges, nodes, out-degrees), each pinned: every one is
+    referenced once PER SWEEP (nodes also in the final left join), and
+    exchange reuse does not cover the upstream scan+dedup subtree
+    (measured: 7 FileScans of one input without the pins)."""
     e = (
         edges.select("src", "dst")
         .dropDuplicates(["src", "dst"])
@@ -69,37 +61,68 @@ def pagerank_converged(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_nodes = nodes.count()
     out_deg = e.groupBy("src").agg(
         F.count(F.lit(1)).alias("out_deg")
     ).localCheckpoint(eager=False)
+    return e, nodes, out_deg
+
+
+def _sweep(
+    e: DataFrame,
+    nodes: DataFrame,
+    out_deg: DataFrame,
+    pr: DataFrame,
+    damping: float,
+    n_nodes: int,
+) -> DataFrame:
+    """One sweep pr'(v) = (1-d)/N + d * Σ pr(u)/deg(u) over in-neighbors u:
+    one edges⋈pr join (shuffled on src — the same partitioning every sweep,
+    so AQE reuses the exchange) plus one sum keyed on dst."""
+    contrib = (
+        e.join(pr, e.src == pr.node)
+        .join(out_deg, "src")
+        .select(
+            F.col("dst").alias("node"),
+            F.round(F.col("pr") / F.col("out_deg"), 12)
+            .cast("decimal(30,12)")
+            .alias("c"),
+        )
+    )
+    sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+    return nodes.join(sums, "node", "left").select(
+        "node",
+        (
+            F.lit((1.0 - damping) / n_nodes)
+            + F.lit(damping)
+            * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
+        ).alias("pr"),
+    )
+
+
+def pagerank_converged(
+    edges: DataFrame,
+    damping: float = 0.85,
+    tol: float = 1e-6,
+    max_iter: int = 50,
+) -> tuple[DataFrame, int]:
+    """PageRank iterated until max |Δpr| < tol; raises like
+    connected_components_star when max_iter sweeps don't converge (wrong
+    results must not come back silently). Returns (pr, n_sweeps); an empty
+    edge set gives an empty frame after 0 sweeps.
+
+    The delta check is one max-aggregate per sweep (a scalar to the
+    driver); each sweep's frame is localCheckpoint-pinned so sweep k+1 and
+    the delta probe don't replay sweeps 1..k."""
+    e, nodes, out_deg = _pinned_graph(edges)
+    n_nodes = nodes.count()
+    if n_nodes == 0:
+        return nodes.select("node", F.lit(0.0).alias("pagerank")), 0
     pr = nodes.withColumn("pr", F.lit(1.0 / n_nodes)).localCheckpoint(
         eager=False
     )
-    base = (1.0 - damping) / n_nodes
     for sweep in range(1, max_iter + 1):
-        contrib = (
-            e.join(pr, e.src == pr.node)
-            .join(out_deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.round(F.col("pr") / F.col("out_deg"), 12)
-                .cast("decimal(30,12)")
-                .alias("c"),
-            )
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        new_pr = (
-            nodes.join(sums, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
+        new_pr = _sweep(e, nodes, out_deg, pr, damping, n_nodes).localCheckpoint(
+            eager=False
         )
         delta = (
             new_pr.join(pr.withColumnRenamed("pr", "pr_old"), "node")
@@ -123,54 +146,18 @@ def pagerank(
 ) -> DataFrame:
     """Fixed-iteration PageRank: pr'(v) = (1-d)/N + d * Σ pr(u)/deg(u)
     over in-neighbors u; dangling mass dropped. Returns (node, pagerank)
-    with pagerank rounded to 6 decimals.
+    with pagerank rounded to 6 decimals; empty for an empty edge set.
 
-    Each iteration is one edges⋈pr join (shuffled on src — the same
-    partitioning every sweep, so AQE reuses the exchange) plus one sum
-    keyed on dst. N is counted once on the driver unless provided.
-    Contributions quantize to DECIMAL(30,12) pre-sum for order-independent
-    exactness (see module docstring).
+    Each iteration is one `_sweep`. N is counted once on the driver unless
+    provided. Contributions quantize to DECIMAL(30,12) pre-sum for
+    order-independent exactness (see module docstring).
     """
-    # pin edges, nodes, and degrees: each is referenced once PER SWEEP, and
-    # exchange reuse does not cover the upstream scan+dedup subtree
-    # (measured: 7 FileScans of one input without the pins)
-    e = (
-        edges.select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        # referenced every iteration AND in the final left join
-        .localCheckpoint(eager=False)
-    )
+    e, nodes, out_deg = _pinned_graph(edges)
     if n_nodes is None:
         n_nodes = nodes.count()
-    out_deg = e.groupBy("src").agg(
-        F.count(F.lit(1)).alias("out_deg")
-    ).localCheckpoint(eager=False)
+    if n_nodes == 0:
+        return nodes.select("node", F.lit(0.0).alias("pagerank"))
     pr = nodes.withColumn("pr", F.lit(1.0 / n_nodes))
-    base = (1.0 - damping) / n_nodes
     for _ in range(iterations):
-        contrib = (
-            e.join(pr, e.src == pr.node)
-            .join(out_deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.round(F.col("pr") / F.col("out_deg"), 12)
-                .cast("decimal(30,12)")
-                .alias("c"),
-            )
-        )
-        sums = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        pr = nodes.join(sums, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.lit(damping)
-                * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
-            ).alias("pr"),
-        )
+        pr = _sweep(e, nodes, out_deg, pr, damping, n_nodes)
     return pr.select("node", F.round("pr", 6).alias("pagerank"))

@@ -93,100 +93,6 @@ def classify_relations(
     return relations
 
 
-def extract_relations_cogrouped(
-    documents: DataFrame,
-    mentions: DataFrame,
-    model_name: str = "rule_re",
-    model_config: dict | None = None,
-    max_distance: int | None = 200,
-    none_label: str = "no_relation",
-    keep_none: bool = False,
-) -> DataFrame:
-    """Fused candidate-generation + classification via cogroup-applyInPandas.
-
-    One shuffle per input (both keyed by doc_id), no per-candidate text
-    duplication, no collect_list — this is the reference's 'candidate pairs
-    generated inside the taskmodule' shape (SURVEY.md §2.3) and the scale
-    path the pipeline uses. The modular candidate_pairs/classify_relations
-    path remains for oracle-checked queries.
-    """
-    doc_side = documents.select("doc_id", "text", "content_sha256")
-    m_side = mentions.select(
-        "doc_id", "mention_id", "start", "end", "label", "surface"
-    )
-
-    def process(key, docs_pdf: pd.DataFrame, ments_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [
-            "doc_id",
-            "head_mention_id",
-            "tail_mention_id",
-            "label",
-            "score",
-            "source",
-            "content_sha256",
-        ]
-        if len(docs_pdf) == 0 or len(ments_pdf) < 2:
-            return pd.DataFrame(columns=cols)
-        model = resolve_model(model_name, model_config)
-        text = docs_pdf["text"].iloc[0]
-        sha = docs_pdf["content_sha256"].iloc[0]
-        doc_id = docs_pdf["doc_id"].iloc[0]
-        ms = sorted(
-            zip(
-                ments_pdf["start"].astype(int),
-                ments_pdf["end"].astype(int),
-                ments_pdf["label"],
-                ments_pdf["mention_id"],
-            )
-        )
-        mlist = [(s, e, lab) for s, e, lab, _ in ms]
-        heads, tails, hl, tl, hid, tid = [], [], [], [], [], []
-        for hs, he, hlab, hmid in ms:
-            for ts, te, tlab, tmid in ms:
-                if hmid == tmid:
-                    continue
-                if max_distance is not None:
-                    gap = max(0, max(hs, ts) - min(he, te))
-                    if gap > max_distance:
-                        continue
-                heads.append((hs, he))
-                tails.append((ts, te))
-                hl.append(hlab)
-                tl.append(tlab)
-                hid.append(hmid)
-                tid.append(tmid)
-        if not heads:
-            return pd.DataFrame(columns=cols)
-        preds = model.predict_pairs(
-            [text] * len(heads),
-            [mlist] * len(heads),
-            heads,
-            tails,
-            head_labels=hl,
-            tail_labels=tl,
-        )
-        out = pd.DataFrame(
-            {
-                "doc_id": doc_id,
-                "head_mention_id": hid,
-                "tail_mention_id": tid,
-                "label": [p[0] for p in preds],
-                "score": [float(p[1]) for p in preds],
-                "source": "pred",
-                "content_sha256": sha,
-            }
-        )
-        if not keep_none:
-            out = out[out["label"] != none_label]
-        return out
-
-    return (
-        doc_side.groupby("doc_id")
-        .cogroup(m_side.groupby("doc_id"))
-        .applyInPandas(process, schema=RELATIONS_SCHEMA)
-    )
-
-
 def extract_relations_batched(
     documents: DataFrame,
     mentions: DataFrame,
@@ -200,10 +106,10 @@ def extract_relations_batched(
     """Fused candidate-generation + classification, ONE Python invocation per
     Arrow batch (not per document).
 
-    The cogroup-applyInPandas variant above invokes the Python worker and
-    allocates a pandas frame per doc_id group — per-key overhead that the
-    extract.py docstring warns against and that dominates at 10^12 docs.
-    Here mentions are pre-aggregated per doc (sort_array+collect_list: one
+    A per-doc_id cogroup would invoke the Python worker and allocate a
+    pandas frame per group — per-key overhead that the extract.py
+    docstring warns against and that dominates at 10^12 docs. Here
+    mentions are pre-aggregated per doc (sort_array+collect_list: one
     shuffle, bounded arrays), joined with the doc text, and the classifier
     runs once per Arrow batch spanning MANY documents: candidate pairs are
     built row-by-row in local Python lists (cheap, no copies — the text is

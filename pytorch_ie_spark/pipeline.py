@@ -16,14 +16,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.candidates import candidate_pairs
 from .operators.canonicalize import canonicalize_mentions
 from .operators.mentions import detect_mentions
-from .operators.relations import (
-    classify_relations,
-    extract_relations_batched,
-    extract_relations_cogrouped,
-)
+from .operators.relations import extract_relations_batched
 from .operators.triples import dedupe_triples, relations_to_triples
 from .plans.lineage import run_stage
 from .plans.skew import salted_repartition, size_bucketed
@@ -59,13 +54,6 @@ class KgPipelineConfig:
     linker_kb: list | None = None
     linker_beam_size: int = 1
     none_label: str = "no_relation"
-    # relation stage plan:
-    #   'batched'   (default) — fused candidates+classify, ONE Python call
-    #               per Arrow batch spanning many docs (the 10^12-doc shape),
-    #   'cogrouped' — fused but one Python call per doc_id group (per-key
-    #               overhead; kept for comparison),
-    #   'modular'   — explicit candidate_pairs self-join + classify_relations.
-    relation_stage: str = "batched"
     # skew handling
     salt_partitions: int | None = None
     size_bucket_width: int = 1024
@@ -124,33 +112,16 @@ def run_kg_pipeline(
     )
 
     def build_relations() -> DataFrame:
-        if cfg.relation_stage == "batched":
-            return extract_relations_batched(
-                documents,
-                mentions,
-                model_name=cfg.re_model,
-                model_config=cfg.re_model_config,
-                max_distance=cfg.max_candidate_distance,
-                none_label=cfg.none_label,
-                max_window=cfg.re_max_window,
-            )
-        if cfg.relation_stage == "cogrouped":
-            return extract_relations_cogrouped(
-                documents,
-                mentions,
-                model_name=cfg.re_model,
-                model_config=cfg.re_model_config,
-                max_distance=cfg.max_candidate_distance,
-                none_label=cfg.none_label,
-            )
-        cands = candidate_pairs(mentions, max_distance=cfg.max_candidate_distance)
-        return classify_relations(
-            cands,
+        # fused candidates+classify, ONE Python call per Arrow batch
+        # spanning many docs (the 10^12-doc shape)
+        return extract_relations_batched(
             documents,
             mentions,
             model_name=cfg.re_model,
             model_config=cfg.re_model_config,
+            max_distance=cfg.max_candidate_distance,
             none_label=cfg.none_label,
+            max_window=cfg.re_max_window,
         )
 
     relations = once(stage("relations", build_relations))

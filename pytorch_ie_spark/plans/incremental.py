@@ -1,31 +1,27 @@
-"""Incremental, idempotent KG ingest: only new (repo, path, commit) work
-units are processed on each run.
+"""Two-phase run-id commit: the one commit protocol of the package.
 
-This is the partition-level complement to the stage-level resume in
-plans/lineage.py: at 10^12-file scale the corpus grows continuously, and a
-failed or partial run must be re-submittable without reprocessing completed
-units (north_rule checkpoint-resume). The completed-unit set is derived
-from an explicit `processed` marker table (so documents that legitimately
-produce zero triples aren't reprocessed forever).
+A *unit* is work that is done at most once per out_dir. Incremental ingest
+has one unit per (repo, path, commit) source file, so a failed or partial
+run can be re-submitted without reprocessing completed units
+(checkpoint-resume at 10^12-file scale); a checkpointed pipeline stage
+(plans/lineage.run_stage) is one unit keyed by its stage name. Every run
+commits the same way:
 
-Crash-idempotency contract (two-phase commit via run ids):
+  1. phase 1 (`_write_run`): each dataset the run produces goes under
+     ``<out_dir>/<dataset>/run_id=<id>/`` — data first,
+  2. phase 2 (`_commit_units`): one ``(unit_key, run_id)`` marker per unit
+     is appended to ``<out_dir>/_processed_units`` ONLY after every phase-1
+     write succeeded — the marker write is the commit point,
+  3. readers (`read_committed_rows`) only see data whose run_id appears in
+     the marker table, so a crash between (1) and (2) leaves invisible
+     orphan data and still-pending units: the replay reprocesses them under
+     a new run_id with no duplicate rows observable. `orphan_run_ids`
+     surfaces leftovers for cleanup.
 
-  1. each run writes its triples under ``triples/run_id=<id>/`` (data first),
-  2. the unit markers — tagged with the same run_id — are written ONLY after
-     the data write succeeded (the marker write is the commit point),
-  3. readers (`read_triples`) only see data whose run_id appears in the
-     marker table, so a crash between (1) and (2) leaves invisible orphan
-     data and still-pending units: the replay reprocesses them under a new
-     run_id with no duplicate triples observable. `orphan_run_ids` surfaces
-     leftovers for cleanup.
-
-Legacy layout: out_dirs written before the run-id scheme have triples
-directly under ``triples/pred=X/`` and markers with no run_id column. Mixed
-partition structures fail Spark's partition discovery in a single read, so
-the readers here discover the two layouts separately (explicit subdirectory
-globs under a shared basePath) and union them, treating all pre-run_id data
-as one implicitly committed run ``run_id='legacy'`` — the old writer's
-presence-means-committed semantics. No migration needed.
+The completed-unit set is the marker table itself, so documents that
+legitimately produce zero triples aren't reprocessed forever. Every path
+check goes through the Hadoop FileSystem of the path, so local paths,
+``file://`` URIs, HDFS and S3A out_dirs behave alike.
 """
 
 from __future__ import annotations
@@ -48,15 +44,16 @@ def _data_path(out_dir: str, data_name: str) -> str:
     return os.path.join(out_dir, data_name)
 
 
-def _triples_path(out_dir: str) -> str:
-    return _data_path(out_dir, "triples")
+def _run_path(out_dir: str, data_name: str, run_id: str) -> str:
+    return os.path.join(_data_path(out_dir, data_name), f"run_id={run_id}")
 
 
 def _unit_key_col():
     return F.concat_ws("@", F.concat_ws("/", "repo", "path"), "commit")
 
 
-LEGACY_RUN_ID = "legacy"
+def _new_run_id() -> str:
+    return uuid.uuid4().hex[:16]
 
 
 def _hadoop_fs(spark: SparkSession, path_str: str):
@@ -81,57 +78,60 @@ def _path_exists(spark: SparkSession, path_str: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _legacy_triple_dirs(spark: SparkSession, out_dir: str) -> list[str]:
-    """pred=* partitions sitting DIRECTLY under triples/ (pre-run_id data)."""
-    return _glob_dirs(spark, os.path.join(_triples_path(out_dir), "pred=*"))
+def _write_run(
+    df: DataFrame,
+    out_dir: str,
+    data_name: str,
+    run_id: str,
+    partition_cols: list[str] | None = None,
+) -> str:
+    """Phase 1: write `df` under ``<out_dir>/<data_name>/run_id=<run_id>/``,
+    invisible to readers until the run commits. Returns that directory."""
+    path = _run_path(out_dir, data_name, run_id)
+    writer = df.write
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+    return path
 
 
-def _modern_triple_dirs(spark: SparkSession, out_dir: str) -> list[str]:
-    return _glob_dirs(spark, os.path.join(_triples_path(out_dir), "run_id=*"))
+def _commit_units(unit_keys: DataFrame, out_dir: str, run_id: str) -> None:
+    """Phase 2, the commit point: one (unit_key, run_id) marker per unit."""
+    (
+        unit_keys.select("unit_key")
+        .dropDuplicates(["unit_key"])
+        .withColumn("run_id", F.lit(run_id))
+        .write.mode("append")
+        .parquet(_processed_path(out_dir))
+    )
 
 
 def _marker_table(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Markers normalized to (unit_key, run_id); legacy marker files (no
-    run_id column) read as run_id='legacy' via parquet schema merge."""
+    """The (unit_key, run_id) commit record, or None before the first commit."""
     ppath = _processed_path(out_dir)
     if not _path_exists(spark, ppath):
         return None
-    m = spark.read.option("mergeSchema", "true").parquet(ppath)
-    if "run_id" not in m.columns:
-        return m.withColumn("run_id", F.lit(LEGACY_RUN_ID))
-    return m.withColumn("run_id", F.coalesce("run_id", F.lit(LEGACY_RUN_ID)))
+    return spark.read.parquet(ppath)
 
 
-def _raw_rows(
-    spark: SparkSession, out_dir: str, data_name: str, partition_col: str
-) -> DataFrame:
-    """All physical rows of a generic dataset regardless of layout
-    generation, with a run_id column (legacy rows get run_id='legacy')."""
-    tpath = _data_path(out_dir, data_name)
-    legacy = _glob_dirs(spark, os.path.join(tpath, f"{partition_col}=*"))
-    modern = _glob_dirs(spark, os.path.join(tpath, "run_id=*"))
-    parts = []
-    if modern:
-        parts.append(spark.read.option("basePath", tpath).parquet(*modern))
-    if legacy:
-        parts.append(
-            spark.read.option("basePath", tpath)
-            .parquet(*legacy)
-            .withColumn("run_id", F.lit(LEGACY_RUN_ID))
-        )
-    if not parts:
-        # no partition dirs at all: surface the same error a direct read would
-        return spark.read.parquet(tpath)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def _committed_run(spark: SparkSession, out_dir: str, unit_key: str) -> str | None:
+    """The run that committed `unit_key`, or None while the unit is pending
+    (the smallest run_id, should concurrent writers both have committed)."""
+    markers = _marker_table(spark, out_dir)
+    if markers is None:
+        return None
+    return markers.where(F.col("unit_key") == unit_key).agg(F.min("run_id")).first()[0]
 
 
-def _raw_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """All physical triples regardless of layout generation, with a run_id
-    column (legacy rows get run_id='legacy')."""
-    return _raw_rows(spark, out_dir, "triples", "pred")
+def _raw_rows(spark: SparkSession, out_dir: str, data_name: str) -> DataFrame:
+    """All physical rows of a dataset, committed or not, with a run_id
+    column."""
+    path = _data_path(out_dir, data_name)
+    runs = _glob_dirs(spark, os.path.join(path, "run_id=*"))
+    if not runs:
+        # no run at all: surface the same error a direct read would
+        return spark.read.parquet(path)
+    return spark.read.option("basePath", path).parquet(*runs)
 
 
 def pending_source_files(
@@ -147,20 +147,11 @@ def pending_source_files(
 
 
 def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame:
-    """(run_id) of runs whose marker write completed — the commit record.
-    Pre-run_id data is an implicitly committed 'legacy' run (the old writer
-    had no invisible-until-committed phase)."""
+    """(run_id) of runs whose marker write completed — the commit record."""
     markers = _marker_table(spark, out_dir)
-    ids = (
-        markers.select("run_id").dropDuplicates(["run_id"])
-        if markers is not None
-        else spark.createDataFrame([], "run_id string")
-    )
-    if _legacy_triple_dirs(spark, out_dir):
-        ids = ids.union(
-            spark.createDataFrame([(LEGACY_RUN_ID,)], "run_id string")
-        ).dropDuplicates(["run_id"])
-    return ids
+    if markers is None:
+        return spark.createDataFrame([], "run_id string")
+    return markers.select("run_id").dropDuplicates(["run_id"])
 
 
 def ingest_increment(
@@ -201,33 +192,20 @@ def ingest_increment(
     n_units = pending.count()
     if n_units == 0:
         return {"processed_units": 0, "new_triples": 0}
-    run_id = uuid.uuid4().hex[:16]
-    rows = build_rows(pending).withColumn("run_id", F.lit(run_id))
-    # phase 1: data under this run's partition (invisible until committed)
-    rows.write.mode("append").partitionBy(
-        "run_id", data_partition_col
-    ).parquet(_data_path(out_dir, data_name))
-    # count the increment from what was actually written for THIS run —
-    # reading only this run's partition directory, NOT the full raw table:
-    # inside a foreachBatch sink the latter would re-list the whole output
-    # dir every micro-batch, scaling with total accumulated runs rather
-    # than batch size
-    run_dir = os.path.join(
-        _data_path(out_dir, data_name), f"run_id={run_id}"
+    run_id = _new_run_id()
+    run_dir = _write_run(
+        build_rows(pending), out_dir, data_name, run_id, [data_partition_col]
     )
-    fs, run_hpath = _hadoop_fs(spark, run_dir)
-    if fs.exists(run_hpath):
+    # count the increment from what THIS run wrote — its own directory, not
+    # the whole dataset: inside a foreachBatch sink the latter would re-list
+    # every earlier run each micro-batch. An all-empty increment leaves only
+    # Spark's hidden commit files behind, so glob past "_" and "." names.
+    if _glob_dirs(spark, os.path.join(run_dir, "[!_.]*")):
         n_rows = spark.read.parquet(run_dir).count()
     else:
-        # an all-empty increment: partitionBy writes no directory at all
         n_rows = 0
-    # phase 2 (commit point): markers carry the run_id that validates the data
-    (
-        pending.select(_unit_key_col().alias("unit_key"))
-        .dropDuplicates(["unit_key"])
-        .withColumn("run_id", F.lit(run_id))
-        .write.mode("append")
-        .parquet(_processed_path(out_dir))
+    _commit_units(
+        pending.select(_unit_key_col().alias("unit_key")), out_dir, run_id
     )
     return {"processed_units": n_units, "new_triples": n_rows}
 
@@ -238,22 +216,21 @@ def read_committed_rows(
     data_name: str = "triples",
     data_partition_col: str = "pred",
 ) -> DataFrame:
-    """Committed rows of a generic two-phase dataset (see ingest_increment's
-    build_rows): data whose run_id has markers; orphans filtered."""
-    raw = _raw_rows(spark, out_dir, data_name, data_partition_col)
-    committed = committed_run_ids(spark, out_dir)
-    return raw.join(
-        F.broadcast(committed), "run_id", "left_semi"
-    ).drop("run_id")
+    """Committed rows of a two-phase dataset (see ingest_increment's
+    build_rows): data whose run_id has markers; orphan data from a crashed
+    run is filtered out — the run-id set is tiny, so the semi join is a
+    broadcast. Partition columns such as `data_partition_col` come back
+    from the directory layout."""
+    return (
+        _raw_rows(spark, out_dir, data_name)
+        .join(F.broadcast(committed_run_ids(spark, out_dir)), "run_id", "left_semi")
+        .drop("run_id")
+    )
 
 
 def read_triples(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed triples only: data whose run_id has markers. Orphan data
-    from a crashed run (data written, markers not) is filtered out — the
-    run-id set is tiny, so the semi join is a broadcast."""
-    t = _raw_triples(spark, out_dir)
-    committed = committed_run_ids(spark, out_dir)
-    return t.join(F.broadcast(committed), "run_id", "left_semi").drop("run_id")
+    """Committed triples only (see read_committed_rows)."""
+    return read_committed_rows(spark, out_dir)
 
 
 def compact_triples(
@@ -299,7 +276,7 @@ def compact_triples(
         return n
 
     return {
-        "files_before": _parquet_files(_triples_path(out_dir)),
+        "files_before": _parquet_files(_data_path(out_dir, "triples")),
         "files_after": _parquet_files(dest_dir),
         "rows": spark.read.parquet(dest_dir).count(),
     }
@@ -309,7 +286,7 @@ def orphan_run_ids(spark: SparkSession, out_dir: str) -> list[str]:
     """run_ids with data on disk but no commit markers (crashed runs) —
     their directories can be deleted at leisure; readers never see them."""
     data_runs = (
-        _raw_triples(spark, out_dir).select("run_id").dropDuplicates(["run_id"])
+        _raw_rows(spark, out_dir, "triples").select("run_id").dropDuplicates(["run_id"])
     )
     committed = committed_run_ids(spark, out_dir)
     return [

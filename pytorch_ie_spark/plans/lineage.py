@@ -1,17 +1,22 @@
 """Checkpoint-resume + per-partition lineage (BASELINE.json north_rule).
 
-Every pipeline stage runs through ``run_stage``:
+Every pipeline stage runs through ``run_stage``, a client of the two-phase
+run-id commit in plans/incremental.py in which a stage is one unit keyed
+by its name:
 
-  - if the stage's snapshot already exists (``_SUCCESS``), it is *not*
-    recomputed — the pipeline resumes from the materialized parquet,
-  - otherwise the stage builds, writes an immutable snapshot, and appends
-    one lineage row per output partition:
+  - if the stage has a committed run, it is *not* recomputed — the
+    pipeline resumes from that run's snapshot,
+  - otherwise the stage builds and, under a fresh run_id, writes its
+    snapshot to ``stages/<stage>/run_id=<id>/`` and one lineage row per
+    output partition to ``lineage/run_id=<id>/``:
       (stage, partition_id, input_sha256_digest, row_count, triple_count,
        wall_time_s, ts)
     where the digest is an order-independent XOR fold of per-row sha256
     values (60-bit prefixes of the content_sha256 column, or of
     sha2(row, 256) when absent) — a true digest of the sha256 hashes,
-    cheap at 100 TB (no sort, no collect).
+    cheap at 100 TB (no sort, no collect). The stage's marker is written
+    last, as the commit point: a crash before it leaves an orphan run that
+    neither resume nor ``read_lineage`` sees, and the stage rebuilds.
 
 Reference analog: the statistics mixin counters
 (src/pytorch_ie/taskmodules/common/mixins.py:210-297) — promoted from
@@ -27,6 +32,15 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .incremental import (
+    _commit_units,
+    _committed_run,
+    _new_run_id,
+    _run_path,
+    _write_run,
+    read_committed_rows,
+)
 
 
 def partition_lineage(
@@ -67,50 +81,29 @@ def partition_lineage(
     )
 
 
-def stage_path(ckpt_dir: str, stage: str) -> str:
-    return os.path.join(ckpt_dir, "stages", stage)
-
-
-def stage_is_complete(ckpt_dir: str, stage: str) -> bool:
-    return os.path.exists(os.path.join(stage_path(ckpt_dir, stage), "_SUCCESS"))
-
-
 def run_stage(
     spark: SparkSession,
     ckpt_dir: str,
     stage: str,
     build: Callable[[], DataFrame],
     partition_cols: list[str] | None = None,
-    force: bool = False,
 ) -> DataFrame:
-    """Build-or-resume a stage snapshot with lineage."""
-    path = stage_path(ckpt_dir, stage)
-    if not force and stage_is_complete(ckpt_dir, stage):
-        return spark.read.parquet(path)
-    t0 = time.monotonic()
-    df = build()
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-    wall = time.monotonic() - t0
-    out = spark.read.parquet(path)
-    lineage = partition_lineage(out, stage, wall)
-    lineage.write.mode("append").parquet(os.path.join(ckpt_dir, "lineage"))
-    return out
+    """Build-or-resume a stage snapshot with lineage, committed as one unit."""
+    data_name = os.path.join("stages", stage)
+    run_id = _committed_run(spark, ckpt_dir, stage)
+    if run_id is None:
+        run_id = _new_run_id()
+        t0 = time.monotonic()
+        path = _write_run(build(), ckpt_dir, data_name, run_id, partition_cols)
+        wall = time.monotonic() - t0
+        lineage = partition_lineage(spark.read.parquet(path), stage, wall)
+        _write_run(lineage, ckpt_dir, "lineage", run_id)
+        _commit_units(
+            spark.createDataFrame([(stage,)], "unit_key string"), ckpt_dir, run_id
+        )
+    return spark.read.parquet(_run_path(ckpt_dir, data_name, run_id))
 
 
 def read_lineage(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(ckpt_dir, "lineage"))
-
-
-def resume_pending_partitions(
-    input_df: DataFrame, completed: DataFrame, key_col: str
-) -> DataFrame:
-    """Partition-level resume: drop input rows whose work-unit key is already
-    recorded as completed (anti-join — SURVEY.md §7 M5)."""
-    return input_df.join(
-        completed.select(F.col(key_col)).dropDuplicates([key_col]),
-        key_col,
-        "left_anti",
-    )
+    """Lineage rows of committed stage runs only."""
+    return read_committed_rows(spark, ckpt_dir, "lineage")

@@ -76,3 +76,18 @@ def test_pagerank_converged_reaches_fixed_point(spark):
     # non-convergence must raise, not return silently
     with pytest.raises(RuntimeError, match="converge"):
         pagerank_converged(_edges(spark), tol=1e-15, max_iter=2)
+
+
+def test_pagerank_empty_edge_set(spark):
+    """No edges means no nodes: both variants return an empty
+    (node, pagerank) frame instead of dividing by N = 0."""
+    from pytorch_ie_spark.operators.graph import pagerank_converged
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    pr = pagerank(empty)
+    assert pr.columns == ["node", "pagerank"]
+    assert pr.collect() == []
+    pr_c, sweeps = pagerank_converged(empty)
+    assert pr_c.columns == ["node", "pagerank"]
+    assert pr_c.collect() == []
+    assert sweeps == 0

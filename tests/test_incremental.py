@@ -79,58 +79,6 @@ def test_crash_between_data_and_markers_is_invisible(spark, sf_dir, tmp_path):
     }
 
 
-def test_legacy_layout_coexists_with_run_id_layout(spark, sf_dir, tmp_path):
-    """out_dirs written by the pre-run_id version (triples directly under
-    triples/pred=X/, markers with no run_id column) must stay readable:
-    legacy data is an implicitly committed 'legacy' run, its units stay
-    processed, and new increments land in the run_id layout alongside it."""
-    from pytorch_ie_spark.operators.extract import (
-        extract_triples_fused,
-        fused_triples,
-    )
-    from pytorch_ie_spark.plans.incremental import committed_run_ids
-    from pytorch_ie_spark.sources.readers import documents_from_source_files
-
-    out = str(tmp_path / "kg")
-    src = source_files_from_documents(spark, sf_dir)
-    legacy_src = src.where(F.crc32("path") % 2 == 0)
-
-    # reproduce the OLD writer's on-disk state verbatim: data under
-    # triples/pred=X/ (no run_id), markers with only unit_key
-    legacy_triples = fused_triples(
-        extract_triples_fused(documents_from_source_files(legacy_src))
-    )
-    legacy_triples.write.mode("append").partitionBy("pred").parquet(
-        f"{out}/triples"
-    )
-    legacy_src.select(
-        F.concat_ws(
-            "@", F.concat_ws("/", "repo", "path"), "commit"
-        ).alias("unit_key")
-    ).dropDuplicates(["unit_key"]).write.mode("append").parquet(
-        f"{out}/_processed_units"
-    )
-    n_legacy = legacy_triples.count()
-
-    # readers see the legacy data as committed
-    assert read_triples(spark, out).count() == n_legacy
-    assert [r["run_id"] for r in committed_run_ids(spark, out).collect()] == [
-        "legacy"
-    ]
-    assert orphan_run_ids(spark, out) == []
-
-    # the next increment processes ONLY the other half, under the new layout
-    r = ingest_increment(spark, src, out)
-    assert 0 < r["processed_units"] < src.count()
-    total = read_triples(spark, out).count()
-    assert total == n_legacy + r["new_triples"]
-    # replay after the mixed-layout write is still a no-op
-    assert ingest_increment(spark, src, out) == {
-        "processed_units": 0,
-        "new_triples": 0,
-    }
-
-
 def test_compact_triples_rewrites_small_files(spark, sf_dir, tmp_path):
     """After several increments the committed view reads many small files;
     the compacted snapshot must hold the identical rows in far fewer files
