@@ -2,9 +2,9 @@
 is the builder's instrument — guide §1.4 noop-sink isolation, §1.5 labels).
 
 Usage:
-  python bench_extra.py [query ...]          # time the named queries (all if none)
-  python bench_extra.py --plans [query ...]  # also dump .explain("formatted")
-                                             # to plans/r06/<query>_<tag>.txt
+  python bench_extra.py [query ...]              # time the named queries (all if none)
+  python bench_extra.py --plans DIR [query ...]  # also dump .explain("formatted")
+                                                 # to DIR/<query>_<tag>.txt
 Env:
   SPARK_GRAFT_SF_DIR   (default /root/testdata/sf1.0 — the driver's scale)
   SPARK_GRAFT_CPUS     (default 32)
@@ -14,6 +14,7 @@ Env:
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -21,10 +22,11 @@ import time
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    dump_plans = "--plans" in args
-    if dump_plans:
-        args.remove("--plans")
+    parser = argparse.ArgumentParser(description="time registry queries")
+    parser.add_argument("queries", nargs="*", help="query names (all if none)")
+    parser.add_argument("--plans", metavar="DIR", help="dump each query's formatted plan into DIR")
+    opts = parser.parse_args()
+    args, plan_dir = opts.queries, opts.plans
     tag = os.environ.get("PLAN_TAG", "before")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -40,7 +42,8 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    os.makedirs("plans/r06", exist_ok=True)
+    if plan_dir:
+        os.makedirs(plan_dir, exist_ok=True)
     timings: dict[str, float] = {}
 
     def drop_persisted_blocks() -> None:
@@ -54,12 +57,12 @@ def main() -> None:
 
     for name in names:
         fn, _oracle = QUERIES[name]
-        if dump_plans:
+        if plan_dir:
             df = fn(spark, sf_dir)
             plan = spark.sparkContext._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(f"plans/r06/{name}_{tag}.txt", "w") as f:
+            with open(os.path.join(plan_dir, f"{name}_{tag}.txt"), "w") as f:
                 f.write(plan)
             drop_persisted_blocks()
         best = None

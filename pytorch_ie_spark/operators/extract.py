@@ -1,6 +1,8 @@
 """Fully fused single-pass extraction: documents -> relation/triple rows in
 ONE mapInPandas stage (tokenize -> window -> NER -> decode -> candidate
 pairs -> RE -> none-suppression), no shuffle until the output aggregation.
+The per-batch work is operators/kernel.py, the same kernel the staged
+mention and relation operators run.
 
 This is the exact shape of the reference pipeline — each document flows
 through taskmodule.encode -> model -> taskmodule.decode in-process
@@ -9,24 +11,21 @@ the staged operators (operators/mentions.py, relations.py) exist for when
 the mention layer itself must be materialized/queried; when only triples
 are needed, staging them through shuffles buys nothing.
 
-Per-batch vectorization notes: one python loop per document (not per pair
-— pair enumeration is numpy-masked), one pandas DataFrame per Arrow batch
-(not per group — this is mapInPandas, not the per-key applyInPandas).
+Per-batch vectorization notes: one predict_tags and one predict_pairs call
+per Arrow batch, pair enumeration numpy-masked per document, one pandas
+DataFrame per Arrow batch (not per group — this is mapInPandas, not the
+per-key applyInPandas).
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.span import bio_tags_to_spans
-from ..functions.tokenize import tokenize_with_offsets
-from ..functions.window import enumerate_windows
-from ..functions.hashing import mention_id
+from .kernel import batch_mentions, classify_pairs
 from .models import resolve_model
 
 TRIPLE_ROWS_SCHEMA = (
@@ -34,6 +33,7 @@ TRIPLE_ROWS_SCHEMA = (
     "head_mention_id string, tail_mention_id string, score double, "
     "content_sha256 string"
 )
+TRIPLE_ROWS_COLUMNS = [c.split()[0] for c in TRIPLE_ROWS_SCHEMA.split(", ")]
 
 
 def extract_triples_fused(
@@ -53,85 +53,15 @@ def extract_triples_fused(
         ner = resolve_model(ner_model, ner_config)
         rel = resolve_model(re_model, re_config)
         for pdf in batches:
-            out = {
-                "doc_id": [],
-                "subj": [],
-                "pred": [],
-                "obj": [],
-                "head_mention_id": [],
-                "tail_mention_id": [],
-                "score": [],
-                "content_sha256": [],
-            }
-            for doc_id, text, sha in zip(
-                pdf["doc_id"], pdf["text"], pdf["content_sha256"]
-            ):
-                toks = tokenize_with_offsets(text or "")
-                if not toks:
-                    continue
-                tokens = [t[0] for t in toks]
-                starts = [t[1] for t in toks]
-                ends = [t[2] for t in toks]
-                # windowed NER with label-slice masking (exactly-once labels)
-                spans: set[tuple[int, int, str]] = set()
-                windows = enumerate_windows(len(tokens), max_window, window_overlap)
-                tags_batch = ner.predict_tags(
-                    [tokens[ts:te] for (ts, te), _ in windows]
-                )
-                for ((ts, te), (ls, le)), tags in zip(windows, tags_batch):
-                    masked = [
-                        tag if ls <= i < le else "O" for i, tag in enumerate(tags)
-                    ]
-                    for label, (s_tok, e_tok) in bio_tags_to_spans(masked):
-                        spans.add(
-                            (starts[ts + s_tok], ends[ts + e_tok], label)
-                        )
-                if len(spans) < 2:
-                    continue
-                ms = sorted(spans)
-                s_arr = np.array([m[0] for m in ms])
-                e_arr = np.array([m[1] for m in ms])
-                # numpy-masked ordered pair enumeration (BOTH directions,
-                # like the staged candidate_pairs operator — reversed
-                # relations such as org:founded_by need head-after-tail)
-                # with the inner-distance bound
-                inner_gap = np.maximum(
-                    0,
-                    np.maximum(s_arr[:, None], s_arr[None, :])
-                    - np.minimum(e_arr[:, None], e_arr[None, :]),
-                )
-                mask = np.ones_like(inner_gap, dtype=bool)
-                np.fill_diagonal(mask, False)
-                if max_distance is not None:
-                    mask &= inner_gap <= max_distance
-                h_idx, t_idx = np.nonzero(mask)
-                if len(h_idx) == 0:
-                    continue
-                mlist = ms
-                heads = [(int(s_arr[i]), int(e_arr[i])) for i in h_idx]
-                tails = [(int(s_arr[i]), int(e_arr[i])) for i in t_idx]
-                preds = rel.predict_pairs(
-                    [text] * len(heads),
-                    [mlist] * len(heads),
-                    heads,
-                    tails,
-                    head_labels=[ms[i][2] for i in h_idx],
-                    tail_labels=[ms[i][2] for i in t_idx],
-                )
-                for hi, ti, (label, score) in zip(h_idx, t_idx, preds):
-                    if label == none_label:
-                        continue
-                    hs, he, hl = ms[hi]
-                    ts_, te_, tl = ms[ti]
-                    out["doc_id"].append(doc_id)
-                    out["subj"].append(text[hs:he])
-                    out["pred"].append(label)
-                    out["obj"].append(text[ts_:te_])
-                    out["head_mention_id"].append(mention_id(doc_id, hs, he, hl))
-                    out["tail_mention_id"].append(mention_id(doc_id, ts_, te_, tl))
-                    out["score"].append(float(score))
-                    out["content_sha256"].append(sha)
-            yield pd.DataFrame(out)
+            docs = batch_mentions(ner, pdf, max_window, window_overlap)
+            rows = [
+                (doc_id, text[hm[0] : hm[1]], label, text[tm[0] : tm[1]],
+                 hm[3], tm[3], float(score), sha)
+                for (doc_id, text, sha, _), hm, tm, (label, score)
+                in zip(*classify_pairs(rel, docs, max_distance))
+                if label != none_label
+            ]
+            yield pd.DataFrame(rows, columns=TRIPLE_ROWS_COLUMNS)
 
     from ..plans.skew import ensure_parallelism
 

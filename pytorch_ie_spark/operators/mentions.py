@@ -1,16 +1,21 @@
 """Mention detection stage: documents -> LabeledSpan mentions.
 
-Spark realization of the reference inference path (SURVEY.md §3.1):
+Spark realization of the reference inference path (SURVEY.md §3.1), the
+reference's in-process encode -> forward -> decode per batch
+(src/pytorch_ie/pipeline.py:309-431):
 
-    read -> mapInPandas(tokenize + enumerate_windows)   # encode_input
-         -> token-length bucketing repartition           # collate locality
-         -> mapInPandas(model.predict -> BIO decode)     # forward + decode
-         -> dropDuplicates(mention_id)                   # window dedup
+    read -> mapInPandas(per Arrow batch: tokenize + enumerate_windows
+                        -> one model.predict_tags over the batch's windows,
+                           sorted by length -> label-slice mask
+                        -> BIO decode -> mention rows)
 
-Every heavy step is Arrow-batched (no per-row Python); the model is loaded
-once per python worker (operators/models.py). Windowing semantics follow
+No shuffle: the kernel (operators/kernel.py) is shared with the fused
+extractor, and the model is loaded once per python worker
+(operators/models.py). Windowing semantics follow
 src/pytorch_ie/utils/window.py:4-27 so every token is labeled in exactly one
 window; BIO decode follows src/pytorch_ie/utils/span.py:41-118.
+`encode_documents` keeps the TaskEncoding rows for the tokenize round trip
+(operators/doc_tokenize.py).
 """
 
 from __future__ import annotations
@@ -19,12 +24,10 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.span import bio_tags_to_spans
 from ..functions.tokenize import tokenize_with_offsets
 from ..functions.window import enumerate_windows
-from ..functions.hashing import mention_id
+from .kernel import batch_mentions
 from .models import resolve_model
 
 ENCODINGS_SCHEMA = (
@@ -38,6 +41,7 @@ MENTIONS_SCHEMA = (
     "doc_id string, mention_id string, start int, end int, label string, "
     "surface string, score double, source string, content_sha256 string"
 )
+MENTION_COLUMNS = [c.split()[0] for c in MENTIONS_SCHEMA.split(", ")]
 
 
 def encode_documents(
@@ -94,115 +98,39 @@ def encode_documents(
     )
 
 
-def bucket_by_length(encodings: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Dynamic token-length bucketing (north_rule): co-locate similar-length
-    windows so each Arrow batch holds similar-length sequences and padding
-    waste inside the model UDF is bounded (reference analog: dynamic padding
-    to longest-in-batch, transformer_token_classification.py:331-349).
-
-    Hash-partition on (length_bucket, bounded deterministic salt) + local
-    sort — the plans/skew.size_bucketed pattern — NOT repartitionByRange:
-    the RangePartitioner runs a separate sampling job over the child plan,
-    i.e. a SECOND execution of the tokenize+window UDF upstream (a full
-    extra pass at 100 TB), and the low-cardinality bucket value would
-    collapse the model stage to #distinct-buckets tasks. One shuffle, no
-    sampling; the salt spreads each bucket across partitions and the local
-    sort restores batch homogeneity."""
-    bucketed = encodings.withColumn(
-        "length_bucket", (F.col("n_tokens") / F.lit(16)).cast("int")
-    )
-    parts = (
-        num_partitions
-        or encodings.sparkSession.sparkContext.defaultParallelism * 2
-    )
-    salt = F.pmod(F.xxhash64("doc_id", "window_idx"), F.lit(parts))
-    return (
-        bucketed.repartition(parts, F.col("length_bucket"), salt)
-        .sortWithinPartitions("length_bucket", "n_tokens")
-        .drop("length_bucket")
-    )
-
-
-def infer_mentions(
-    encodings: DataFrame,
-    model_name: str = "rule_ner",
-    model_config: dict | None = None,
-) -> DataFrame:
-    """Run the NER model over windows and decode BIO tags to char-span
-    mentions. Only tags inside the window's label slice are decoded, so
-    overlapping windows never double-report (window.py:4-27 contract)."""
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = resolve_model(model_name, model_config)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            batch_tokens = [list(t) for t in pdf["tokens"]]
-            tags_batch = model.predict_tags(batch_tokens)
-            rows = []
-            # column zips, not iterrows() — row-wise pandas iteration is the
-            # slow path inside an otherwise Arrow-vectorized stage
-            for doc_id, tokens, starts, ends, ls, le, sha, tags in zip(
-                pdf["doc_id"],
-                batch_tokens,
-                pdf["token_starts"],
-                pdf["token_ends"],
-                pdf["label_offset_start"],
-                pdf["label_offset_end"],
-                pdf["content_sha256"],
-                tags_batch,
-            ):
-                # restrict decoding to the label slice: mask context tokens
-                masked = [
-                    tag if ls <= i < le else "O" for i, tag in enumerate(tags)
-                ]
-                for label, (s_tok, e_tok) in bio_tags_to_spans(masked):
-                    cs, ce = int(starts[s_tok]), int(ends[e_tok])
-                    surface = " ".join(tokens[s_tok : e_tok + 1])
-                    rows.append(
-                        (
-                            doc_id,
-                            mention_id(doc_id, cs, ce, label),
-                            cs,
-                            ce,
-                            label,
-                            surface,
-                            1.0,
-                            "pred",
-                            sha,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "mention_id",
-                    "start",
-                    "end",
-                    "label",
-                    "surface",
-                    "score",
-                    "source",
-                    "content_sha256",
-                ],
-            )
-
-    return encodings.mapInPandas(infer, schema=MENTIONS_SCHEMA)
-
-
 def detect_mentions(
     documents: DataFrame,
     model_name: str = "rule_ner",
     model_config: dict | None = None,
     max_window: int = 128,
     window_overlap: int = 16,
-    bucket_partitions: int | None = None,
 ) -> DataFrame:
-    """End-to-end mention stage. Note `surface` is token-joined text; for
-    exact substring surfaces join back to documents.text downstream."""
-    enc = encode_documents(documents, max_window, window_overlap)
-    enc = bucket_by_length(enc, bucket_partitions)
-    mentions = infer_mentions(enc, model_name, model_config)
-    # cross-window safety dedup (annotation equality-by-value:
-    # utils/document.py:18-36)
-    return mentions.dropDuplicates(["mention_id"])
+    """End-to-end mention stage: one mapInPandas over the documents, no
+    shuffle (operators/kernel.batch_mentions per Arrow batch). Note
+    `surface` is token-joined text; for exact substring surfaces join back
+    to documents.text downstream.
+
+    mention_id = hash(doc_id, span, label), so a document listed twice
+    would repeat its mentions. The stage keeps the first row of each
+    doc_id per partition, which makes mention_id unique whenever copies of
+    a document share a partition — as they do in the pipeline, whose
+    documents stage hash-partitions on whole rows (plans/skew.size_bucketed)."""
+
+    def detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = resolve_model(model_name, model_config)
+        seen: set[str] = set()
+        for pdf in batches:
+            pdf = pdf[~pdf["doc_id"].isin(seen)].drop_duplicates("doc_id")
+            seen.update(pdf["doc_id"])
+            rows = [
+                (doc_id, mid, cs, ce, label, surface, 1.0, "pred", sha)
+                for doc_id, _text, sha, ms in batch_mentions(
+                    model, pdf, max_window, window_overlap
+                )
+                for cs, ce, label, mid, surface in ms
+            ]
+            yield pd.DataFrame(rows, columns=MENTION_COLUMNS)
+
+    return documents.select("doc_id", "text", "content_sha256").mapInPandas(
+        detect, schema=MENTIONS_SCHEMA
+    )

@@ -18,12 +18,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .kernel import classify_pairs
 from .models import resolve_model
 
 RELATIONS_SCHEMA = (
     "doc_id string, head_mention_id string, tail_mention_id string, "
     "label string, score double, source string, content_sha256 string"
 )
+RELATION_COLUMNS = [c.split()[0] for c in RELATIONS_SCHEMA.split(", ")]
 
 
 def classify_relations(
@@ -109,23 +111,17 @@ def extract_relations_batched(
     A per-doc_id cogroup would invoke the Python worker and allocate a
     pandas frame per group — per-key overhead that the extract.py
     docstring warns against and that dominates at 10^12 docs. Here
-    mentions are pre-aggregated per doc (sort_array+collect_list: one
-    shuffle, bounded arrays), joined with the doc text, and the classifier
-    runs once per Arrow batch spanning MANY documents: candidate pairs are
-    built row-by-row in local Python lists (cheap, no copies — the text is
-    shared by reference) and predicted in a single vectorized call.
+    mentions are pre-aggregated per doc (sort_array+collect_set: one
+    shuffle, bounded arrays, a repeated mention kept once), joined with the
+    doc text, and operators/kernel.classify_pairs enumerates each
+    document's candidate pairs with a numpy mask and classifies the whole
+    batch in a single vectorized call.
 
-    When `max_window` is set, each candidate's context is restricted to a
-    window of that many chars centered on the (head..tail) required slice
-    — the reference's window-around-candidate
-    (re_text_classification_with_indices.py:1071-1093): the model sees the
-    windowed text with shifted span offsets, so long documents never feed
-    the classifier more context than it can hold; candidates whose args
-    alone exceed the window are skipped (skipped_too_long)."""
-    from ..functions.window import window_around_slice
+    `max_window` bounds each candidate's classifier context to a window
+    of that many chars around its arguments (see classify_pairs)."""
     m_agg = mentions.groupBy("doc_id").agg(
         F.sort_array(
-            F.collect_list(F.struct("start", "end", "label", "mention_id"))
+            F.collect_set(F.struct("start", "end", "label", "mention_id"))
         ).alias("ments")
     )
     joined = documents.select("doc_id", "text", "content_sha256").join(
@@ -134,87 +130,34 @@ def extract_relations_batched(
 
     def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = resolve_model(model_name, model_config)
-        cols = [
-            "doc_id",
-            "head_mention_id",
-            "tail_mention_id",
-            "label",
-            "score",
-            "source",
-            "content_sha256",
-        ]
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            texts, mlists, heads, tails = [], [], [], []
-            hl, tl, hid, tid, dids, shas = [], [], [], [], [], []
-            for doc_id, text, sha, ments in zip(
-                pdf["doc_id"], pdf["text"], pdf["content_sha256"], pdf["ments"]
-            ):
-                ms = [
+            docs = [
+                (doc_id, text, sha, [
                     (int(m["start"]), int(m["end"]), m["label"], m["mention_id"])
                     for m in ments
-                ]
-                if len(ms) < 2:
-                    continue
-                mlist = [(s, e, lab) for s, e, lab, _ in ms]
-                for hs, he, hlab, hmid in ms:
-                    for ts, te, tlab, tmid in ms:
-                        if hmid == tmid:
-                            continue
-                        if max_distance is not None:
-                            gap = max(0, max(hs, ts) - min(he, te))
-                            if gap > max_distance:
-                                continue
-                        if max_window is not None:
-                            win = window_around_slice(
-                                (min(hs, ts), max(he, te)),
-                                max_window,
-                                len(text),
-                            )
-                            if win is None:  # skipped_too_long
-                                continue
-                            ws, we = win
-                            texts.append(text[ws:we])
-                            mlists.append(
-                                [
-                                    (s - ws, e - ws, lab)
-                                    for s, e, lab in mlist
-                                    if s >= ws and e <= we
-                                ]
-                            )
-                            heads.append((hs - ws, he - ws))
-                            tails.append((ts - ws, te - ws))
-                        else:
-                            texts.append(text)
-                            mlists.append(mlist)
-                            heads.append((hs, he))
-                            tails.append((ts, te))
-                        hl.append(hlab)
-                        tl.append(tlab)
-                        hid.append(hmid)
-                        tid.append(tmid)
-                        dids.append(doc_id)
-                        shas.append(sha)
-            if not heads:
-                continue
-            preds = model.predict_pairs(
-                texts, mlists, heads, tails, head_labels=hl, tail_labels=tl
+                ])
+                for doc_id, text, sha, ments in zip(
+                    pdf["doc_id"], pdf["text"], pdf["content_sha256"], pdf["ments"]
+                )
+            ]
+            pair_docs, heads, tails, preds = classify_pairs(
+                model, docs, max_distance, max_window
             )
             out = pd.DataFrame(
                 {
-                    "doc_id": dids,
-                    "head_mention_id": hid,
-                    "tail_mention_id": tid,
+                    "doc_id": [d[0] for d in pair_docs],
+                    "head_mention_id": [m[3] for m in heads],
+                    "tail_mention_id": [m[3] for m in tails],
                     "label": [p[0] for p in preds],
                     "score": [float(p[1]) for p in preds],
                     "source": "pred",
-                    "content_sha256": shas,
-                }
+                    "content_sha256": [d[2] for d in pair_docs],
+                },
+                columns=RELATION_COLUMNS,
             )
             if not keep_none:
                 out = out[out["label"] != none_label]
-            yield out[cols]
+            yield out
 
     return joined.mapInPandas(infer, schema=RELATIONS_SCHEMA)
 

@@ -53,7 +53,9 @@ def _unit_key_col():
 
 
 def _new_run_id() -> str:
-    return uuid.uuid4().hex[:16]
+    # the letter prefix keeps partition discovery from inferring run_id as
+    # a number when every run dir of a dataset happens to be all digits
+    return "r" + uuid.uuid4().hex[:15]
 
 
 def _hadoop_fs(spark: SparkSession, path_str: str):

@@ -2762,8 +2762,11 @@ def q_kg_mentions_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real pipeline NER stage (mapInPandas tokenize->window->infer->BIO
     decode, operators/mentions.py) with the gazetteer model. On the synthetic
     single-space corpus the regex tokenizer equals split-on-space, so the SQL
-    oracle for kg_mentions applies verbatim."""
+    oracle for kg_mentions applies verbatim. detect_mentions runs where
+    its input partitions are, so the single-split documents scan is fanned
+    out first, as the pipeline's documents stage does."""
     from .operators.mentions import detect_mentions
+    from .plans.skew import ensure_parallelism
 
     docs = read_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -2772,7 +2775,9 @@ def q_kg_mentions_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sha2("text", 256).alias("content_sha256"),
     )
     m = detect_mentions(
-        docs, model_name="gazetteer_ner", model_config={"gazetteer": GAZETTEER}
+        ensure_parallelism(docs),
+        model_name="gazetteer_ner",
+        model_config={"gazetteer": GAZETTEER},
     )
     return m.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -244,3 +244,63 @@ def test_pipeline_rejects_unknown_linker():
     # validation fires before any Spark work, so no session is needed
     with pytest.raises(ValueError, match="linker"):
         run_kg_pipeline(None, None, KgPipelineConfig(linker="genre"))
+
+
+def test_long_document_overlap_mentions_once(spark):
+    """A document many windows long, with mentions on the overlap tokens
+    that two windows share: each mention comes out exactly once, and the
+    mention layer equals the spans the fused extractor pairs up."""
+    from pytorch_ie_spark.operators.extract import extract_triples_fused
+
+    # max_window=16, overlap=4: windows [0,16) [8,24) [16,32) ..., so
+    # tokens 8-15, 16-23, ... sit in two windows each
+    words = ["pad"] * 64
+    for i in (9, 11, 12, 15, 17, 20, 23, 40):
+        words[i] = "spark" if i % 2 else "scan"
+    text = " ".join(words)
+    docs = spark.createDataFrame(
+        [("long", text, "sha")], "doc_id string, text string, content_sha256 string"
+    )
+    kwargs = dict(max_window=16, window_overlap=4)
+    mentions = detect_mentions(docs, model_name="gazetteer_ner", **kwargs).collect()
+    spans = sorted((m["start"], m["end"], m["label"]) for m in mentions)
+    starts = [len(" ".join(words[:i])) + (i > 0) for i in range(len(words))]
+    want = sorted(
+        (s, s + len(w), "ENGINE" if w == "spark" else "OP")
+        for s, w in zip(starts, words)
+        if w != "pad"
+    )
+    assert spans == want
+    assert len({m["mention_id"] for m in mentions}) == len(mentions)
+
+    fused = extract_triples_fused(docs, max_distance=None, **kwargs).collect()
+    fused_ids = {r["head_mention_id"] for r in fused} | {
+        r["tail_mention_id"] for r in fused
+    }
+    assert fused_ids == {m["mention_id"] for m in mentions}
+
+
+def test_duplicate_source_file(spark, tmp_path):
+    """A source that lists one file twice: the mention layer keeps one
+    mention per mention_id, the relation stage never pairs a mention with
+    a copy of itself, and the triples equal the deduplicated source's."""
+    from pytorch_ie_spark.operators.relations import extract_relations_batched
+    from pytorch_ie_spark.plans.incremental import read_committed_rows
+
+    src = fixture_source_files(spark)
+    doubled = src.unionByName(src.where(F.col("path") == "train_doc5.txt"))
+    ckpt = str(tmp_path / "ckpt")
+    triples = run_kg_pipeline(spark, doubled, KgPipelineConfig(), ckpt_dir=ckpt)
+    key = ["doc_id", "subj", "pred", "obj", "head_mention_id", "tail_mention_id"]
+    got = sorted(map(tuple, triples.select(*key).collect()))
+    want = run_kg_pipeline(spark, src, KgPipelineConfig()).select(*key).collect()
+    assert got == sorted(map(tuple, want)) and len(got) == 13
+
+    mentions = read_committed_rows(spark, ckpt, "stages/mentions")
+    ids = [r["mention_id"] for r in mentions.collect()]
+    assert len(ids) == len(set(ids)) > 0
+
+    repeated = mentions.unionByName(mentions.where(F.col("doc_id").contains("doc5")))
+    docs = read_committed_rows(spark, ckpt, "stages/documents")
+    pairs = extract_relations_batched(docs, repeated, keep_none=True).collect()
+    assert pairs and all(r["head_mention_id"] != r["tail_mention_id"] for r in pairs)

@@ -86,3 +86,54 @@ def test_detect_mentions_with_hf_wrapper_matches_rule_ner(spark):
     hf_rows = sorted(map(tuple, hf.select(*cols).collect()))
     rule_rows = sorted(map(tuple, rule.select(*cols).collect()))
     assert hf_rows == rule_rows and len(hf_rows) > 0
+
+
+def test_batch_kernel_sorts_windows_and_restores_order(fake_hf):
+    """Fixture documents windowed small give one batch of windows with mixed
+    lengths. The kernel tags them in one call in length order (the HF
+    wrapper pads each chunk to its longest window) and must hand every
+    window its own tags back: the spans equal a window-by-window
+    reference loop."""
+    import pandas as pd
+
+    from pytorch_ie_spark.corpus import FIXTURE_DOCS
+    from pytorch_ie_spark.functions.span import bio_tags_to_spans
+    from pytorch_ie_spark.functions.tokenize import tokenize_with_offsets
+    from pytorch_ie_spark.functions.window import enumerate_windows
+    from pytorch_ie_spark.operators.kernel import batch_mentions
+    from pytorch_ie_spark.operators.models import (
+        HFTokenClassificationModel,
+        RuleNerModel,
+    )
+
+    hf = HFTokenClassificationModel("fake/checkpoint", batch_size=3)
+    lengths = []
+
+    class Recording:
+        def predict_tags(self, batch):
+            lengths.extend(map(len, batch))
+            return hf.predict_tags(batch)
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [d["id"] for d in FIXTURE_DOCS],
+            "text": [d["text"] for d in FIXTURE_DOCS],
+            "content_sha256": "sha",
+        }
+    )
+    got = {
+        (doc_id, s, e, label)
+        for doc_id, _, _, ms in batch_mentions(Recording(), pdf, 6, 2)
+        for s, e, label, _, _ in ms
+    }
+    assert len(set(lengths)) > 1 and lengths == sorted(lengths)
+
+    want = set()
+    for d in FIXTURE_DOCS:
+        toks = tokenize_with_offsets(d["text"])
+        for (ts, te), (ls, le) in enumerate_windows(len(toks), 6, 2):
+            tags = RuleNerModel().predict_tags([[t[0] for t in toks[ts:te]]])[0]
+            masked = [t if ls <= i < le else "O" for i, t in enumerate(tags)]
+            for label, (s, e) in bio_tags_to_spans(masked):
+                want.add((d["id"], toks[ts + s][1], toks[ts + e][2], label))
+    assert got == want and len(got) > 0

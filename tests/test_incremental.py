@@ -106,3 +106,30 @@ def test_compact_triples_rewrites_small_files(spark, sf_dir, tmp_path):
         assert len(files) == 1, pred_dir
     # ingest dir untouched: replay still a no-op
     assert ingest_increment(spark, src, out)["processed_units"] == 0
+
+
+def test_all_digit_run_id_reads_back(spark, sf_dir, tmp_path, monkeypatch):
+    """A uuid whose leading hex chars are all digits must still give a run
+    id that partition discovery reads as a string. Here the triples sit
+    under one run dir and a second, empty increment commits another run:
+    a run dir named run_id=0123456789012345 would be inferred as a number
+    (dropping its leading zero), and the join against the committed
+    run_id abcdef0123456789 would fail under ANSI casts."""
+    import uuid
+
+    from pytorch_ie_spark.plans import incremental
+
+    draws = iter(["0123456789012345" + "0" * 16, "abcdef0123456789" + "0" * 16])
+    monkeypatch.setattr(
+        incremental.uuid, "uuid4", lambda: uuid.UUID(hex=next(draws))
+    )
+    out = str(tmp_path / "kg")
+    src = source_files_from_documents(spark, sf_dir)
+    first = ingest_increment(spark, src.where(F.crc32("path") % 2 == 0), out)
+    assert first["new_triples"] > 0
+    triples = read_triples(spark, out)
+    empty = ingest_increment(
+        spark, src, out, build_rows=lambda pending: triples.limit(0)
+    )
+    assert empty["processed_units"] > 0 and empty["new_triples"] == 0
+    assert read_triples(spark, out).count() == first["new_triples"]

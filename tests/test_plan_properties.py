@@ -71,29 +71,21 @@ def test_ivf_probes_are_broadcast(spark, sf001):
 
 
 def test_mention_stage_has_no_range_sampling(spark, sf001):
-    """bucket_by_length must not plan a RangePartitioning above the
-    tokenize+window UDF: the RangePartitioner's sampling job would execute
-    the UDF a second time (a full extra pass at 100 TB). The plan must show
-    a plain hash exchange instead."""
-    from pytorch_ie_spark.operators.mentions import (
-        bucket_by_length,
-        detect_mentions,
-        encode_documents,
-    )
+    """detect_mentions is one mapInPandas over its input: no Exchange and no
+    RangePartitioning above the documents (a RangePartitioner's sampling
+    job would execute the Python stage a second time, and any shuffle would
+    ship token arrays or mention rows between stages)."""
+    from pytorch_ie_spark.operators.mentions import detect_mentions
     from pytorch_ie_spark.sources.readers import read_table
 
-    docs = read_table(spark, sf001, "documents").limit(50).select(
+    docs = read_table(spark, sf001, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         "text",
         F.sha2("text", 256).alias("content_sha256"),
     )
-    for df in (
-        bucket_by_length(encode_documents(docs)),
-        detect_mentions(docs),
-    ):
-        plan = _plan(df)
-        assert "rangepartitioning" not in plan.lower(), plan
-        assert "hashpartitioning" in plan.lower()
+    plan = _plan(detect_mentions(docs))
+    assert "MapInPandas" in plan
+    assert "Exchange" not in plan and "rangepartitioning" not in plan.lower(), plan
 
 
 def test_mentions_lineage_scan_is_parallel(spark, sf001):
