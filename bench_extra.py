@@ -6,7 +6,7 @@ Usage:
   python bench_extra.py --plans DIR [query ...]  # also dump .explain("formatted")
                                                  # to DIR/<query>_<tag>.txt
 Env:
-  SPARK_GRAFT_SF_DIR   (default /root/testdata/sf1.0 — the driver's scale)
+  SPARK_GRAFT_SF_DIR   (default: the sf0.1 directory that bench.py reads)
   SPARK_GRAFT_CPUS     (default 32)
   SPARK_GRAFT_BENCH_RUNS  best-of-N (default 2)
   PLAN_TAG             suffix for plan files (default "before")
@@ -28,7 +28,7 @@ def main() -> None:
     opts = parser.parse_args()
     args, plan_dir = opts.queries, opts.plans
     tag = os.environ.get("PLAN_TAG", "before")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

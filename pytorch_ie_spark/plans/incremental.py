@@ -19,9 +19,11 @@ commits the same way:
      surfaces leftovers for cleanup.
 
 The completed-unit set is the marker table itself, so documents that
-legitimately produce zero triples aren't reprocessed forever. Every path
-check goes through the Hadoop FileSystem of the path, so local paths,
-``file://`` URIs, HDFS and S3A out_dirs behave alike.
+legitimately produce zero triples aren't reprocessed forever. An increment
+pins its pending set once and observes its row counts on the writes,
+never by reading them back. Every path check goes through the Hadoop
+FileSystem of the path, so local paths, ``file://`` URIs, HDFS and S3A
+out_dirs behave alike.
 """
 
 from __future__ import annotations
@@ -29,11 +31,14 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_triples_fused, fused_triples
 from ..sources.readers import documents_from_source_files
+
+
+MARKER_SCHEMA = "unit_key string, run_id string"
 
 
 def _processed_path(out_dir: str) -> str:
@@ -108,20 +113,20 @@ def _commit_units(unit_keys: DataFrame, out_dir: str, run_id: str) -> None:
     )
 
 
-def _marker_table(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The (unit_key, run_id) commit record, or None before the first commit."""
+def _marker_table(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The (unit_key, run_id) commit record, empty before the first commit.
+    Its schema is declared, so reading it runs no schema-inference job."""
     ppath = _processed_path(out_dir)
     if not _path_exists(spark, ppath):
-        return None
-    return spark.read.parquet(ppath)
+        # limit(0) lets the optimizer fold the empty frame out of joins
+        return spark.createDataFrame([], MARKER_SCHEMA).limit(0)
+    return spark.read.schema(MARKER_SCHEMA).parquet(ppath)
 
 
 def _committed_run(spark: SparkSession, out_dir: str, unit_key: str) -> str | None:
     """The run that committed `unit_key`, or None while the unit is pending
     (the smallest run_id, should concurrent writers both have committed)."""
     markers = _marker_table(spark, out_dir)
-    if markers is None:
-        return None
     return markers.where(F.col("unit_key") == unit_key).agg(F.min("run_id")).first()[0]
 
 
@@ -140,20 +145,14 @@ def pending_source_files(
     spark: SparkSession, source_files: DataFrame, out_dir: str
 ) -> DataFrame:
     """Anti-join the source against already-processed unit keys."""
-    markers = _marker_table(spark, out_dir)
-    if markers is None:
-        return source_files
-    done = markers.select("unit_key")
+    done = _marker_table(spark, out_dir).select("unit_key")
     keyed = source_files.withColumn("unit_key", _unit_key_col())
     return keyed.join(done, "unit_key", "left_anti").drop("unit_key")
 
 
 def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame:
     """(run_id) of runs whose marker write completed — the commit record."""
-    markers = _marker_table(spark, out_dir)
-    if markers is None:
-        return spark.createDataFrame([], "run_id string")
-    return markers.select("run_id").dropDuplicates(["run_id"])
+    return _marker_table(spark, out_dir).select("run_id").dropDuplicates(["run_id"])
 
 
 def ingest_increment(
@@ -176,9 +175,10 @@ def ingest_increment(
     <data_partition_col>=*`. One out_dir hosts ONE dataset — the unit
     markers record source progress for that dataset only.
 
+    The pending set is pinned for the call and released on every exit.
     Returns {'processed_units': n, 'new_triples': n} where new_triples is
-    the count of THIS increment's rows (not the on-disk total) — zeros
-    when the run is a no-op replay (idempotency)."""
+    the count of THIS increment's rows (not the on-disk total), observed on
+    the write — zeros when the run is a no-op replay (idempotency)."""
     if build_rows is None:
         def build_rows(pending_src: DataFrame) -> DataFrame:
             return fused_triples(
@@ -190,26 +190,21 @@ def ingest_increment(
                 )
             )
 
-    pending = pending_source_files(spark, source_files, out_dir)
-    n_units = pending.count()
-    if n_units == 0:
-        return {"processed_units": 0, "new_triples": 0}
-    run_id = _new_run_id()
-    run_dir = _write_run(
-        build_rows(pending), out_dir, data_name, run_id, [data_partition_col]
-    )
-    # count the increment from what THIS run wrote — its own directory, not
-    # the whole dataset: inside a foreachBatch sink the latter would re-list
-    # every earlier run each micro-batch. An all-empty increment leaves only
-    # Spark's hidden commit files behind, so glob past "_" and "." names.
-    if _glob_dirs(spark, os.path.join(run_dir, "[!_.]*")):
-        n_rows = spark.read.parquet(run_dir).count()
-    else:
-        n_rows = 0
-    _commit_units(
-        pending.select(_unit_key_col().alias("unit_key")), out_dir, run_id
-    )
-    return {"processed_units": n_units, "new_triples": n_rows}
+    pending = pending_source_files(spark, source_files, out_dir).persist()
+    try:
+        n_units = pending.count()
+        if n_units == 0:
+            return {"processed_units": 0, "new_triples": 0}
+        run_id = _new_run_id()
+        written = Observation()
+        rows = build_rows(pending).observe(written, F.count(F.lit(1)).alias("n"))
+        _write_run(rows, out_dir, data_name, run_id, [data_partition_col])
+        _commit_units(
+            pending.select(_unit_key_col().alias("unit_key")), out_dir, run_id
+        )
+        return {"processed_units": n_units, "new_triples": written.get["n"]}
+    finally:
+        pending.unpersist()
 
 
 def read_committed_rows(
@@ -255,12 +250,14 @@ def compact_triples(
     Returns {'files_before': n, 'files_after': n, 'rows': n} for lineage.
     """
     t = read_triples(spark, out_dir)
+    written = Observation()
     salt = F.pmod(
         F.xxhash64(*[F.col(c) for c in t.columns]),
         F.lit(max(1, files_per_partition)),
     )
     (
-        t.repartition(F.col("pred"), salt)
+        t.observe(written, F.count(F.lit(1)).alias("n"))
+        .repartition(F.col("pred"), salt)
         .write.mode("overwrite")
         .partitionBy("pred")
         .parquet(dest_dir)
@@ -280,15 +277,18 @@ def compact_triples(
     return {
         "files_before": _parquet_files(_data_path(out_dir, "triples")),
         "files_after": _parquet_files(dest_dir),
-        "rows": spark.read.parquet(dest_dir).count(),
+        "rows": written.get["n"],
     }
 
 
-def orphan_run_ids(spark: SparkSession, out_dir: str) -> list[str]:
-    """run_ids with data on disk but no commit markers (crashed runs) —
-    their directories can be deleted at leisure; readers never see them."""
+def orphan_run_ids(
+    spark: SparkSession, out_dir: str, data_name: str = "triples"
+) -> list[str]:
+    """run_ids of `data_name` with data on disk but no commit markers
+    (crashed runs) — their directories can be deleted at leisure; readers
+    never see them."""
     data_runs = (
-        _raw_rows(spark, out_dir, "triples").select("run_id").dropDuplicates(["run_id"])
+        _raw_rows(spark, out_dir, data_name).select("run_id").dropDuplicates(["run_id"])
     )
     committed = committed_run_ids(spark, out_dir)
     return [

@@ -11,9 +11,10 @@ by its name:
     output partition to ``lineage/run_id=<id>/``:
       (stage, partition_id, input_sha256_digest, row_count, triple_count,
        wall_time_s, ts)
-    where the digest is an order-independent XOR fold of per-row sha256
-    values (60-bit prefixes of the content_sha256 column, or of
-    sha2(row, 256) when absent) — a true digest of the sha256 hashes,
+    where triple_count is the row count on the ``triples`` stage and null
+    on every other stage, and the digest is an order-independent XOR fold
+    of per-row sha256 values (60-bit prefixes of the content_sha256 column,
+    or of sha2(row, 256) when absent) — a true digest of the sha256 hashes,
     cheap at 100 TB (no sort, no collect). The stage's marker is written
     last, as the commit point: a crash before it leaves an orphan run that
     neither resume nor ``read_lineage`` sees, and the stage rebuilds.
@@ -48,7 +49,8 @@ def partition_lineage(
 ) -> DataFrame:
     """One row per Spark partition of `df` with an order-independent digest
     of the partition's sha256 values (XOR of 60-bit sha256 prefixes — the
-    column name says sha256, so the fold input really is sha256)."""
+    column name says sha256, so the fold input really is sha256).
+    `triple_count` is set on the ``triples`` stage only."""
     if digest_col and digest_col in df.columns:
         sha = F.col(digest_col)
     else:
@@ -74,7 +76,9 @@ def partition_lineage(
             F.col("partition_id").cast("int"),
             "input_sha256_digest",
             F.col("row_count").cast("long"),
-            F.col("row_count").cast("long").alias("triple_count"),
+            (F.col("row_count") if stage == "triples" else F.lit(None))
+            .cast("long")
+            .alias("triple_count"),
             F.lit(float(wall_time_s)).alias("wall_time_s"),
             F.lit(ts).alias("ts"),
         )

@@ -136,7 +136,7 @@ LINEAGE = T.StructType(
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("input_sha256_digest", T.StringType(), False),
         T.StructField("row_count", T.LongType(), False),
-        T.StructField("triple_count", T.LongType(), False),
+        T.StructField("triple_count", T.LongType(), True),
         T.StructField("wall_time_s", T.DoubleType(), False),
         T.StructField("ts", T.StringType(), False),
     ]

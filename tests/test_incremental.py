@@ -1,6 +1,10 @@
 """Incremental ingest: idempotent replay + only-new-units processing +
 crash between data write and marker write (two-phase run-id commit)."""
 
+import uuid
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import functions as F
 
 from pytorch_ie_spark.plans.incremental import (
@@ -8,7 +12,29 @@ from pytorch_ie_spark.plans.incremental import (
     orphan_run_ids,
     read_triples,
 )
-from pytorch_ie_spark.sources.readers import source_files_from_documents
+from pytorch_ie_spark.sources.readers import (
+    documents_from_source_files,
+    source_files_from_documents,
+)
+
+
+@contextmanager
+def _job_group(spark):
+    """Yields a list that holds, once the block exits, the ids of the Spark
+    jobs the block ran."""
+    sc = spark.sparkContext
+    group = "test-" + uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    jobs = []
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _pinned_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def test_incremental_ingest_idempotent(spark, sf_dir, tmp_path):
@@ -94,7 +120,10 @@ def test_compact_triples_rewrites_small_files(spark, sf_dir, tmp_path):
 
     before = read_triples(spark, out)
     rows_before = sorted(map(tuple, before.collect()))
-    audit = compact_triples(spark, out, dest, files_per_partition=1)
+    with _job_group(spark) as jobs:
+        audit = compact_triples(spark, out, dest, files_per_partition=1)
+    # the row count is observed on the rewrite, not read back from dest
+    assert len(jobs) <= 6, jobs
     after = spark.read.parquet(dest)
     assert sorted(map(tuple, after.select(*before.columns).collect())) == rows_before
     assert audit["rows"] == len(rows_before)
@@ -133,3 +162,59 @@ def test_all_digit_run_id_reads_back(spark, sf_dir, tmp_path, monkeypatch):
     )
     assert empty["processed_units"] > 0 and empty["new_triples"] == 0
     assert read_triples(spark, out).count() == first["new_triples"]
+
+
+def test_increment_pins_pending_once(spark, sf_dir, tmp_path):
+    """An increment computes its pending set once and counts its rows on
+    the write: the second increment runs at most 10 Spark jobs only if the
+    count, the data write and the marker write share one source scan and
+    marker anti-join and nothing written is read back; the first, with no
+    marker table yet, at most 8 (no join against the empty marker frame).
+    The pinned pending set is released after a commit, after a no-op
+    replay and after a build_rows that raises."""
+    out = str(tmp_path / "kg")
+    src = source_files_from_documents(spark, sf_dir)
+    first, second = (src.where(F.crc32("path") % 2 == k) for k in (0, 1))
+    pinned = _pinned_rdds(spark)
+
+    with _job_group(spark) as jobs:
+        r1 = ingest_increment(spark, first, out)
+    assert len(jobs) <= 8, jobs
+    assert not _pinned_rdds(spark) - pinned
+    with _job_group(spark) as jobs:
+        r2 = ingest_increment(spark, second, out)
+    assert len(jobs) <= 10, jobs
+    assert not _pinned_rdds(spark) - pinned
+    assert r1["processed_units"] + r2["processed_units"] == src.count()
+    assert read_triples(spark, out).count() == r1["new_triples"] + r2["new_triples"]
+
+    assert ingest_increment(spark, src, out)["processed_units"] == 0
+    assert not _pinned_rdds(spark) - pinned
+
+    def failing_build(pending):
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        ingest_increment(spark, src, str(tmp_path / "kg2"), build_rows=failing_build)
+    assert not _pinned_rdds(spark) - pinned
+
+
+def test_orphan_run_ids_of_any_dataset(spark, sf_dir, tmp_path):
+    """orphan_run_ids lists the crashed runs of the dataset it is given:
+    here a doc_labels out_dir (as the doc-label stream writes it) with one
+    committed run and one planted run that never got its markers."""
+    from pytorch_ie_spark.operators.doc_classify import classify_documents
+
+    def labels(pending):
+        return classify_documents(documents_from_source_files(pending))
+
+    out = str(tmp_path / "labels")
+    src = source_files_from_documents(spark, sf_dir)
+    ingest_increment(
+        spark, src.limit(10), out, build_rows=labels,
+        data_name="doc_labels", data_partition_col="label",
+    )
+    labels(src.limit(5)).write.partitionBy("label").parquet(
+        f"{out}/doc_labels/run_id=rcrashedlabels"
+    )
+    assert orphan_run_ids(spark, out, "doc_labels") == ["rcrashedlabels"]

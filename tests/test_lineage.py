@@ -38,18 +38,25 @@ def test_run_stage_writes_and_resumes(spark, tmp_path):
 
 def test_lineage_rows_shape(spark, tmp_path):
     ckpt = str(tmp_path)
-    run_stage(
-        spark,
-        ckpt,
-        "s1",
-        lambda: spark.range(50).withColumn(
-            "content_sha256", F.sha2(F.col("id").cast("string"), 256)
-        ),
-    )
+    for stage, n in (("s1", 50), ("triples", 30)):
+        run_stage(
+            spark,
+            ckpt,
+            stage,
+            lambda n=n: spark.range(n).withColumn(
+                "content_sha256", F.sha2(F.col("id").cast("string"), 256)
+            ),
+        )
     lin = read_lineage(spark, ckpt)
     rows = lin.collect()
-    assert {r["stage"] for r in rows} == {"s1"}
-    assert sum(r["row_count"] for r in rows) == 50
+    assert {r["stage"] for r in rows} == {"s1", "triples"}
+    s1 = [r for r in rows if r["stage"] == "s1"]
+    assert sum(r["row_count"] for r in s1) == 50
+    # triple_count is only meaningful on the triples stage
+    assert all(r["triple_count"] is None for r in s1)
+    triples = [r for r in rows if r["stage"] == "triples"]
+    assert sum(r["row_count"] for r in triples) == 30
+    assert all(r["triple_count"] == r["row_count"] for r in triples)
     assert all(r["wall_time_s"] >= 0 for r in rows)
     assert all(r["input_sha256_digest"] for r in rows)
     assert set(lin.columns) == {
