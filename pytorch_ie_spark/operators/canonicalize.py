@@ -11,9 +11,11 @@ the merge+dedup in utils/document.py:76-144):
      shingle, functions/hashing.py) -> candidate equivalence edges within
      LSH buckets,
   4. verify edges by exact Jaccard on shingle sets (array_intersect),
-  5. connected components via iterative DataFrame min-label propagation
-     (hash-to-min style; localCheckpoint per round to cut lineage),
-  6. canonical entity_id = lexicographic min normalized form per component.
+  5. connected components: driver union-find below a bounded edge count,
+     else alternating large-star/small-star rounds; either way a component
+     is labelled with its minimum node,
+  6. entity_id = 'sf:' + the component label, i.e. the lexicographic min
+     normalized form per component (null for an empty normalized form).
 
 Scale notes: every step is a shuffle on a bounded key (band key / node id);
 bucket sizes are capped (`max_bucket`) so a degenerate band (stopword-ish
@@ -25,6 +27,7 @@ from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,31 +91,22 @@ def minhash_signature_cols(shingle_col, num_hashes: int = 16):
     ]
 
 
-def _minhash_struct_col(shingle_col, num_hashes: int):
+def _minhash_struct_col(shingle_col: str, num_hashes: int):
     """All components in ONE fold: aggregate over the base-hash array (the
-    aggregate's input expression — the md5 pass — is evaluated once per row),
-    with the bound element reused by every affine term. Integer math only
-    inside the fold."""
-    init = F.struct(
-        *[
-            F.lit(MINHASH_PRIME).cast("long").alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+    md5 pass runs once per row), the bound element reused by every affine
+    term, BIGINT integer math only. Built from one SQL string: one JVM call
+    instead of one per expression node of a Column-built fold."""
+    names = [f"mh{i}" for i in range(num_hashes)]
+    init = ", ".join(f"'{n}', {MINHASH_PRIME}L" for n in names)
+    merge = ", ".join(
+        f"'{n}', least(acc.{n}, (h * {a}L + {b}L) % {MINHASH_PRIME}L)"
+        for n, (a, b) in zip(names, MINHASH_AB)
     )
-
-    def merge(acc, h):
-        fields = []
-        for i in range(num_hashes):
-            a, b = MINHASH_AB[i]
-            fields.append(
-                F.least(
-                    acc[f"mh{i}"],
-                    (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME),
-                ).alias(f"mh{i}")
-            )
-        return F.struct(*fields)
-
-    return F.aggregate(_base_hash_col(shingle_col), init, merge)
+    return F.expr(
+        f"aggregate(transform(`{shingle_col}`, "
+        "x -> CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT)), "
+        f"named_struct({init}), (acc, h) -> named_struct({merge}))"
+    )
 
 
 def with_minhash_signature(df, shingle_col: str, num_hashes: int = 16):
@@ -125,7 +119,7 @@ def with_minhash_signature(df, shingle_col: str, num_hashes: int = 16):
     is needed, so nothing large stays pinned in executor memory."""
     return df.select(
         *df.columns,
-        F.inline(F.array(_minhash_struct_col(F.col(shingle_col), num_hashes))),
+        F.inline(F.array(_minhash_struct_col(shingle_col, num_hashes))),
     )
 
 
@@ -134,11 +128,13 @@ def link_entities(
     entity_col: str = "entity_id"
 ) -> DataFrame:
     """Dictionary entity linking: normalized-surface equi-join against a small
-    alias table — broadcast by hint (the dictionary is the 'small dim')."""
+    alias table — broadcast by hint (the dictionary is the 'small dim'). An
+    alias that normalizes to "" links nothing (it would match every surface
+    with no Latin letter or digit)."""
     aliases = alias_dict.select(
         normalize_surface(F.col(alias_col)).alias("_norm"),
         F.col(entity_col).alias("linked_entity_id"),
-    ).dropDuplicates(["_norm"])
+    ).where(F.col("_norm") != "").dropDuplicates(["_norm"])
     m = mentions.withColumn("_norm", normalize_surface(F.col("surface")))
     return m.join(F.broadcast(aliases), "_norm", "left").drop("_norm")
 
@@ -271,7 +267,9 @@ def _edges_from_stack(
 
 def _driver_side_components(spark, edge_rows) -> DataFrame:
     """Union-find on the driver for small graphs — identical output contract
-    (component = min node label in the component)."""
+    (component = min node label: a union parents the larger root to the
+    smaller). Returned from an Arrow table, i.e. a LocalRelation the
+    optimizer can size and broadcast, not a pickled Python RDD."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -289,8 +287,10 @@ def _driver_side_components(spark, edge_rows) -> DataFrame:
         ra, rb = find(src), find(dst)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node string, component string")
+    nodes = list(parent)
+    schema = pa.schema([("node", pa.string()), ("component", pa.string())])
+    table = pa.table([nodes, [find(n) for n in nodes]], schema=schema)
+    return spark.createDataFrame(table)
 
 
 def _sym_explode(edges: DataFrame) -> DataFrame:
@@ -382,12 +382,12 @@ def connected_components(
 
     Hybrid execution: equivalence graphs are usually tiny relative to the
     corpus (distinct near-duplicate surface pairs), so below
-    `driver_threshold` edges we run union-find on the driver — one job
-    instead of iterative joins. Above it, the distributed path is
-    alternating large-star/small-star (connected_components_star):
-    O(log n) rounds on ANY graph shape — min-label propagation, the
-    previous distributed path, needed O(diameter) rounds and crawled on
-    chain-shaped graphs. Both paths produce component = min node label,
+    `driver_threshold` edges we run union-find on the driver. One bounded
+    `limit(driver_threshold + 1).collect()` is both the size probe and the
+    edge list. Above the threshold, the distributed path is alternating
+    large-star/small-star (connected_components_star): O(log n) rounds on
+    ANY graph shape, where min-label propagation needs O(diameter) rounds
+    and crawls on chains. Both paths produce component = min node label,
     so results are identical (asserted in tests/test_canonicalize.py).
     """
     und = (
@@ -397,12 +397,9 @@ def connected_components(
         # (and the single-pass explode halves that lineage vs a self-union)
         .localCheckpoint()
     )
-    spark = edges.sparkSession
-    small = und.limit(driver_threshold + 1).count() <= driver_threshold
-    if small:
-        return _driver_side_components(
-            spark, [(r["src"], r["dst"]) for r in und.collect()]
-        )
+    rows = und.limit(driver_threshold + 1).collect()
+    if len(rows) <= driver_threshold:
+        return _driver_side_components(edges.sparkSession, rows)
     return connected_components_star(und, max_iter=max_iter)
 
 
@@ -416,8 +413,9 @@ def canonicalize_mentions(
     """Full canonicalization: returns (mention_entity_map, components).
 
     mention_entity_map: (mention_id, entity_id) where entity_id is the linked
-    dictionary id when available, else 'sf:' + canonical surface of the
-    mention's connected component.
+    dictionary id when available, else 'sf:' + the label of the mention's
+    connected component (its minimum normalized surface), else null for a
+    surface that normalizes to the empty string.
 
     This is a corpus-scale entry point, so the LSH quadratic-bucket guard is
     ON by default (`max_bucket=1000`: one degenerate band key otherwise makes
@@ -467,7 +465,9 @@ def canonicalize_mentions(
         base, stacked, jaccard_threshold, max_bucket
     )
     comps = connected_components(edges)
-    # singletons (no edges) keep themselves as component
+    # singletons (no edges) keep themselves as component; a component's
+    # label is its min surface, i.e. the canonical one. A surface that
+    # normalizes to "" gets no id (triples keep its raw surface)
     comps_full = (
         surfaces.join(comps, surfaces.surface_norm == comps.node, "left")
         .select(
@@ -475,12 +475,11 @@ def canonicalize_mentions(
             F.coalesce(F.col("component"), F.col("surface_norm")).alias("component"),
         )
     )
-    canonical = comps_full.groupBy("component").agg(
-        F.min("surface_norm").alias("canonical_surface")
-    )
-    surface_entity = comps_full.join(canonical, "component").select(
+    surface_entity = comps_full.select(
         "surface_norm",
-        F.concat(F.lit("sf:"), F.col("canonical_surface")).alias("cc_entity_id"),
+        F.when(
+            F.col("surface_norm") != "", F.concat(F.lit("sf:"), F.col("component"))
+        ).alias("cc_entity_id"),
     )
     m = mentions.withColumn("surface_norm", normalize_surface(F.col("surface")))
     if alias_dict is not None:

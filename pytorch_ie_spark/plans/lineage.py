@@ -103,7 +103,7 @@ def run_stage(
         lineage = partition_lineage(spark.read.parquet(path), stage, wall)
         _write_run(lineage, ckpt_dir, "lineage", run_id)
         _commit_units(
-            spark.createDataFrame([(stage,)], "unit_key string"), ckpt_dir, run_id
+            spark.range(1).select(F.lit(stage).alias("unit_key")), ckpt_dir, run_id
         )
     return spark.read.parquet(_run_path(ckpt_dir, data_name, run_id))
 

@@ -15,6 +15,7 @@ Engine-portability contract used throughout (so value hashes match):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -421,7 +422,7 @@ def q_kg_entity_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast alias-dictionary linking; per-entity mention counts."""
     m = mentions_df(spark, sf_dir)
     aliases = spark.createDataFrame(
-        [(k, v) for k, v in ALIAS_DICT.items()], "alias string, entity_id string"
+        pa.table({"alias": list(ALIAS_DICT), "entity_id": list(ALIAS_DICT.values())})
     )
     linked = m.join(
         F.broadcast(aliases), normalize_surface(F.col("surface")) == F.col("alias")

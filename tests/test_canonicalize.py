@@ -1,15 +1,26 @@
 """Canonicalization: MinHash-LSH blocking + connected components
 (FIXTURES.md §4 canonicalization fixture)."""
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from pytorch_ie_spark.operators.canonicalize import (
+    _driver_side_components,
     canonicalize_mentions,
     connected_components,
     link_entities,
     lsh_candidate_edges,
     normalize_surface,
 )
+from pytorch_ie_spark.operators.mentions import detect_mentions
+from pytorch_ie_spark.operators.triples import relations_to_triples
+from pytorch_ie_spark.sources.readers import (
+    documents_from_source_files,
+    source_files_from_documents,
+)
+from tests.test_incremental import _job_group
 
 
 def _mentions(spark, surfaces):
@@ -70,6 +81,69 @@ def test_connected_components_distributed_path_matches_driver(spark):
     }
     assert distributed == driver
     assert distributed["d"] == "a" and distributed["y"] == "x" and distributed["n"] == "m"
+
+
+@pytest.mark.parametrize("driver_threshold", [0, 100_000])
+def test_component_label_is_min_member(spark, driver_threshold):
+    """On both CC paths (star rounds, driver union-find) every component is
+    labelled with its minimum member, which canonicalize_mentions uses as
+    the canonical surface without recomputing it."""
+    rng = random.Random(11)
+    rows = [tuple(f"v{x:02d}" for x in rng.sample(range(40), 2)) for _ in range(30)]
+    comps = connected_components(
+        spark.createDataFrame(rows, "src string, dst string"),
+        driver_threshold=driver_threshold,
+    ).collect()
+    label = {r["node"]: r["component"] for r in comps}
+    assert all(label[a] == label[b] for a, b in rows)
+    for c in set(label.values()):
+        assert c == min(n for n, l in label.items() if l == c)
+
+
+def test_driver_side_components_is_a_local_relation(spark):
+    """The driver-side component map plans as a LocalRelation (Arrow-built),
+    not a pickled Python RDD, with or without edges."""
+    df = _driver_side_components(spark, [("c", "b"), ("b", "a"), ("x", "y")])
+    assert "LocalRelation" in df._jdf.queryExecution().analyzed().toString()
+    assert sorted(map(tuple, df.collect())) == [
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")
+    ]
+    empty = _driver_side_components(spark, [])
+    assert empty.schema.simpleString() == "struct<node:string,component:string>"
+    assert empty.count() == 0
+
+
+def test_canonicalize_job_bound(spark, sf_dir):
+    """canonicalize_mentions plus a count of its map runs at most 13 Spark
+    jobs on the sf0.001 mentions: the component map is a LocalRelation
+    (no Python-RDD jobs), one bounded collect is both the CC size probe and
+    the edge list, and no aggregate recomputes the canonical surface."""
+    docs = documents_from_source_files(source_files_from_documents(spark, sf_dir))
+    mentions = detect_mentions(docs, model_name="gazetteer_ner").localCheckpoint()
+    with _job_group(spark) as jobs:
+        n = canonicalize_mentions(mentions)[0].count()
+    assert n == mentions.count()
+    assert len(jobs) <= 13, jobs
+
+
+def test_non_latin_surfaces_keep_their_own_ids(spark):
+    """Surfaces that normalize to "" get no canonical id, so a relation
+    between two of them keeps its raw surfaces instead of becoming the
+    self-loop ("sf:", near, "sf:")."""
+    m = _mentions(spark, ["北京", "東京"])
+    mapping, _ = canonicalize_mentions(m)
+    assert [r["entity_id"] for r in mapping.collect()] == [None, None]
+    rel = spark.createDataFrame(
+        [("d0", "m0", "m1", "near", 1.0, None)],
+        "doc_id string, head_mention_id string, tail_mention_id string, "
+        "label string, score double, content_sha256 string",
+    )
+    t = relations_to_triples(rel, m, mapping).collect()
+    assert [(r["subj"], r["pred"], r["obj"]) for r in t] == [("北京", "near", "東京")]
+    # an alias that normalizes to "" must not link every such surface
+    aliases = spark.createDataFrame([("北京", "Q956")], "alias string, entity_id string")
+    linked, _ = canonicalize_mentions(m, alias_dict=aliases)
+    assert [r["entity_id"] for r in linked.collect()] == [None, None]
 
 
 def test_canonicalize_mentions_end_to_end(spark):

@@ -45,21 +45,28 @@ def test_minhash_pairs_detect_near_duplicates(spark):
 
 
 def test_minhash_signature_matches_python(spark):
-    text = "some example document text"
-    df = _docs(spark, [text])
+    """Both Spark MinHash forms equal the plain-Python minhash_signature:
+    the per-component minhash_signature_cols and the one-fold
+    with_minhash_signature at 16 components, on several texts including
+    one shorter than the shingle width."""
     from pytorch_ie_spark.operators.canonicalize import (
         char_shingles_col,
         minhash_signature_cols,
+        with_minhash_signature,
     )
     from pytorch_ie_spark.operators.dedup import normalize_text
 
-    row = (
-        df.select(char_shingles_col(normalize_text(F.col("text")), 5).alias("sh"))
-        .select(*minhash_signature_cols(F.col("sh"), 4))
-        .collect()[0]
+    texts = ["some example document text", "abc", "the quick brown fox", "aaaaaaaa"]
+    sh = _docs(spark, texts).select(
+        "doc_id", char_shingles_col(normalize_text(F.col("text")), 5).alias("sh")
     )
-    expected = minhash_signature(char_shingles(text, 5), 4)
-    assert [row[f"mh{i}"] for i in range(4)] == expected
+    per_col = sh.select("doc_id", *minhash_signature_cols(F.col("sh"), 4))
+    folded = with_minhash_signature(sh, "sh", 16)
+    for df, n in ((per_col, 4), (folded, 16)):
+        got = {r["doc_id"]: [r[f"mh{i}"] for i in range(n)] for r in df.collect()}
+        assert got == {
+            i: minhash_signature(char_shingles(t, 5), n) for i, t in enumerate(texts)
+        }
 
 
 def test_simhash_matches_python(spark):
