@@ -6,11 +6,12 @@ the merge+dedup in utils/document.py:76-144):
 
   1. normalize surface forms (JVM-side string expressions),
   2. entity linking against a broadcast alias dictionary (equi-join),
-  3. MinHash-LSH blocking over char-shingles of the normalized surface
-     (portable universal-hash min-hashing over one md5 base hash per
-     shingle, functions/hashing.py) -> candidate equivalence edges within
-     LSH buckets,
-  4. verify edges by exact Jaccard on shingle sets (array_intersect),
+  3. MinHash-LSH blocking over char-shingles of the normalized surface ->
+     candidate equivalence edges within LSH buckets, and
+  4. verify edges by exact Jaccard on shingle sets — both steps are the
+     MinHash-LSH core of operators/dedup.py (band stack, bucket cap, band
+     self-join, Jaccard check); `lsh_candidate_edges` reports the verified
+     `jaccard` rounded to 6 places, as the document dedup does,
   5. connected components: driver union-find below a bounded edge count,
      else alternating large-star/small-star rounds; either way a component
      is labelled with its minimum node,
@@ -20,7 +21,7 @@ the merge+dedup in utils/document.py:76-144):
 Scale notes: every step is a shuffle on a bounded key (band key / node id);
 bucket sizes are capped (`max_bucket`) so a degenerate band (stopword-ish
 surface) cannot produce a quadratic pair explosion — dropped buckets are
-observable via lineage counts, not silent.
+logged, not silent.
 """
 
 from __future__ import annotations
@@ -31,9 +32,16 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
+from .dedup import (
+    band_stack,
+    bucket_pairs,
+    cap_buckets,
+    char_shingles_col,
+    dropped_buckets,
+    jaccard_pairs,
+)
 
-from ..functions.hashing import MINHASH_AB, MINHASH_PRIME
+logger = logging.getLogger(__name__)
 
 
 def normalize_surface(col):
@@ -42,85 +50,6 @@ def normalize_surface(col):
     c = F.regexp_replace(c, r"[^a-z0-9 ]", "")
     c = F.regexp_replace(c, r"\s+", " ")
     return F.trim(c)
-
-
-def char_shingles_col(col, k: int = 3):
-    """Distinct k-char shingles as an array column (whole-stage codegen,
-    no UDF): substring windows over 1..len-k+1."""
-    return F.array_distinct(
-        F.when(F.length(col) < k, F.array(col)).otherwise(
-            F.transform(
-                F.sequence(F.lit(1), F.length(col) - (k - 1)),
-                lambda i: col.substr(i, F.lit(k)),
-            )
-        )
-    )
-
-
-def _base_hash_col(shingle_col):
-    """32-bit base hash per shingle: int(md5(shingle)[:8], 16). ONE digest per
-    shingle serves every signature component (functions/hashing.py family)."""
-    return F.transform(
-        shingle_col,
-        lambda x: F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("long"),
-    )
-
-
-def _affine_min(hash_arr_col, idx: int):
-    """mh_idx = min over base hashes of (a*h + b) mod P — integer math only.
-    Factory (not inline lambda) so each component captures its own constants;
-    a 2-arg lambda to F.transform would be (element, index) and corrupt them."""
-    a, b = MINHASH_AB[idx]
-    return F.array_min(
-        F.transform(
-            hash_arr_col,
-            lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME),
-        )
-    )
-
-
-def minhash_signature_cols(shingle_col, num_hashes: int = 16):
-    """Portable universal-hash MinHash (functions/hashing.py semantics):
-    component i = min over shingles of (a_i * int(md5(sh)[:8],16) + b_i) mod P.
-    NB: when several components are selected from the same projection the
-    md5 pass is inlined per component (CollapseProject treats transform() as
-    cheap) — use with_minhash_signature for the staged two-phase plan."""
-    return [
-        _affine_min(_base_hash_col(shingle_col), i).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
-def _minhash_struct_col(shingle_col: str, num_hashes: int):
-    """All components in ONE fold: aggregate over the base-hash array (the
-    md5 pass runs once per row), the bound element reused by every affine
-    term, BIGINT integer math only. Built from one SQL string: one JVM call
-    instead of one per expression node of a Column-built fold."""
-    names = [f"mh{i}" for i in range(num_hashes)]
-    init = ", ".join(f"'{n}', {MINHASH_PRIME}L" for n in names)
-    merge = ", ".join(
-        f"'{n}', least(acc.{n}, (h * {a}L + {b}L) % {MINHASH_PRIME}L)"
-        for n, (a, b) in zip(names, MINHASH_AB)
-    )
-    return F.expr(
-        f"aggregate(transform(`{shingle_col}`, "
-        "x -> CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT)), "
-        f"named_struct({init}), (acc, h) -> named_struct({merge}))"
-    )
-
-
-def with_minhash_signature(df, shingle_col: str, num_hashes: int = 16):
-    """Adds mh0..mh{n-1} long columns in a single pass over the shingles.
-
-    The struct is surfaced through F.inline(F.array(...)) — a generator is
-    evaluated once per row, whereas selecting N getFields of a struct
-    expression lets CollapseProject duplicate the whole aggregate (and its
-    md5 pass) into every component column. No caching or checkpoint barrier
-    is needed, so nothing large stays pinned in executor memory."""
-    return df.select(
-        *df.columns,
-        F.inline(F.array(_minhash_struct_col(shingle_col, num_hashes))),
-    )
 
 
 def link_entities(
@@ -139,65 +68,30 @@ def link_entities(
     return m.join(F.broadcast(aliases), "_norm", "left").drop("_norm")
 
 
-def _surface_band_stack(
-    surfaces: DataFrame,
-    surface_col: str,
-    shingle_k: int,
-    num_hashes: int,
-    band_size: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(base, stacked): distinct non-empty surfaces with shingles, plus the
-    exploded (node, band_key) MinHash band stack they hash into."""
-    base = (
+def _surface_shingles(
+    surfaces: DataFrame, surface_col: str, shingle_k: int
+) -> DataFrame:
+    """(node, shingles) of the non-empty surfaces; `surfaces` is distinct."""
+    return (
         surfaces.select(F.col(surface_col).alias("node"))
         .where(F.length("node") > 0)
-        .dropDuplicates(["node"])
         .withColumn("shingles", char_shingles_col(F.col("node"), shingle_k))
     )
-    sig = with_minhash_signature(base, "shingles", num_hashes)
-    bands = []
-    for b in range(0, num_hashes, band_size):
-        cols = [
-            F.col(f"mh{i}").cast("string")
-            for i in range(b, min(b + band_size, num_hashes))
-        ]
-        bands.append(
-            F.concat_ws("|", F.lit(str(b)), *cols).alias(f"band{b // band_size}")
-        )
-    with_bands = sig.select("node", *bands)
-    n_bands = len(bands)
-    # narrow band shuffle: (node, band_key) only; shingles re-joined for the
-    # surviving pairs
-    # materialize: referenced by bucket_sizes AND both self-join sides — the
-    # signature md5 passes must not be recomputed per reference
-    stacked = with_bands.select(
-        "node",
-        F.explode(
-            F.array(*[F.col(f"band{i}") for i in range(n_bands)])
-        ).alias("band_key"),
-    ).localCheckpoint(eager=False)
-    return base, stacked
 
 
-def lsh_dropped_surface_buckets(
-    surfaces: DataFrame,
-    surface_col: str = "surface_norm",
-    shingle_k: int = 3,
-    num_hashes: int = 16,
-    band_size: int = 4,
-    max_bucket: int = 1000,
+def _verified_edges(
+    base: DataFrame,
+    stacked: DataFrame,
+    jaccard_threshold: float,
+    max_bucket: int | None,
 ) -> DataFrame:
-    """(band_key, bucket_size) of the band buckets `lsh_candidate_edges`
-    drops under the same parameters — the surface-canonicalization twin of
-    dedup.lsh_dropped_buckets, so the `max_bucket` approximation is
-    auditable at runtime rather than only by a rerun diagnostic."""
-    _, stacked = _surface_band_stack(
-        surfaces, surface_col, shingle_k, num_hashes, band_size
+    """(src, dst, jaccard) edges of the capped band self-join. No fan-out:
+    the surface graph is small, and a keyed repartition only adds tasks."""
+    pairs = bucket_pairs(
+        cap_buckets(stacked, max_bucket), "node", "src", "dst", fan_out=False
     )
-    return (
-        stacked.groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .where(F.col("bucket_size") > max_bucket)
+    return jaccard_pairs(
+        pairs, base, base, "node", "src", "dst", jaccard_threshold
     )
 
 
@@ -216,53 +110,9 @@ def lsh_candidate_edges(
     `max_bucket=None` (default) is exact. At corpus scale pass a cap: band
     buckets above it are dropped before the self-join (quadratic otherwise);
     the cap is a window count inside the self-join's own band_key shuffle."""
-    base, stacked = _surface_band_stack(
-        surfaces, surface_col, shingle_k, num_hashes, band_size
-    )
-    return _edges_from_stack(
-        base, stacked, jaccard_threshold, max_bucket
-    )
-
-
-def _edges_from_stack(
-    base: DataFrame,
-    stacked: DataFrame,
-    jaccard_threshold: float,
-    max_bucket: int | None,
-) -> DataFrame:
-    """Edges from a precomputed (base, stacked) band stack — split out so
-    canonicalize_mentions can share ONE stack between the dropped-bucket
-    audit and the candidate self-join instead of hashing twice."""
-    if max_bucket is not None:
-        # cap pathological buckets to avoid quadratic blowup on degenerate
-        # keys — window count over band_key rides the self-join's shuffle
-        from pyspark.sql import Window
-
-        stacked = (
-            stacked.withColumn(
-                "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band_key"))
-            )
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    a = stacked.select("band_key", F.col("node").alias("src"))
-    b_ = stacked.select("band_key", F.col("node").alias("dst"))
-    pairs = (
-        a.join(b_, "band_key")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    src_sh = base.select(F.col("node").alias("src"), F.col("shingles").alias("src_sh"))
-    dst_sh = base.select(F.col("node").alias("dst"), F.col("shingles").alias("dst_sh"))
-    pairs = pairs.join(src_sh, "src").join(dst_sh, "dst")
-    inter = F.size(F.array_intersect(F.col("src_sh"), F.col("dst_sh")))
-    union = F.size(F.col("src_sh")) + F.size(F.col("dst_sh")) - inter
-    return (
-        pairs.withColumn("jaccard", inter / union)
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("src", "dst", "jaccard")
-    )
+    base = _surface_shingles(surfaces, surface_col, shingle_k)
+    stacked = band_stack(base, "node", num_hashes, band_size)
+    return _verified_edges(base, stacked, jaccard_threshold, max_bucket)
 
 
 def _driver_side_components(spark, edge_rows) -> DataFrame:
@@ -422,8 +272,7 @@ def canonicalize_mentions(
     the candidate self-join O(n^2)); pass None for the exact variant the
     oracle-gated dedup queries use. When the cap engages, the dropped-bucket
     count is logged at WARNING (one tiny aggregate job over the distinct
-    surfaces) so the approximation is observable at runtime; the full audit
-    table is `lsh_dropped_surface_buckets`.
+    surfaces' band stack) so the approximation is observable at runtime.
     """
     # pin the distinct-surface table: the band stack, the singleton join,
     # and the final mention mapping all read it — unpinned, each action
@@ -436,17 +285,15 @@ def canonicalize_mentions(
         .dropDuplicates(["surface_norm"])
         .localCheckpoint(eager=False)
     )
-    # ONE band stack shared between the audit aggregate and the candidate
-    # self-join (the stack is localCheckpoint-pinned inside); the audit is
-    # one tiny extra aggregate over already-materialized rows
-    base, stacked = _surface_band_stack(
-        surfaces, "surface_norm", shingle_k, 16, 4
-    )
+    # ONE pinned band stack shared between the audit aggregate and the
+    # candidate self-join
+    base = _surface_shingles(surfaces, "surface_norm", shingle_k)
+    stacked = band_stack(base, "node", 16, 4)
     if max_bucket is not None:
+        # .first(), not DataFrame.observe: an observation fails when AQE
+        # prunes the observed branch on tiny input
         dropped = (
-            stacked.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("bucket_size"))
-            .where(F.col("bucket_size") > max_bucket)
+            dropped_buckets(stacked, max_bucket)
             .agg(
                 F.count(F.lit(1)).alias("n_buckets"),
                 F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("n_rows"),
@@ -457,13 +304,10 @@ def canonicalize_mentions(
             logger.warning(
                 "canonicalize_mentions: max_bucket=%d dropped %d band "
                 "bucket(s) covering %d surface-band rows — entity-id "
-                "assignment is approximate for those surfaces "
-                "(lsh_dropped_surface_buckets has the audit table)",
+                "assignment is approximate for those surfaces",
                 max_bucket, dropped["n_buckets"], dropped["n_rows"],
             )
-    edges = _edges_from_stack(
-        base, stacked, jaccard_threshold, max_bucket
-    )
+    edges = _verified_edges(base, stacked, jaccard_threshold, max_bucket)
     comps = connected_components(edges)
     # singletons (no edges) keep themselves as component; a component's
     # label is its min surface, i.e. the canonical one. A surface that

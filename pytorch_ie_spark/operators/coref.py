@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.window import centered_window_cols
-from .canonicalize import char_shingles_col, normalize_surface
+from .canonicalize import normalize_surface
+from .dedup import char_shingles_col
 
 
 def coref_text_pairs(

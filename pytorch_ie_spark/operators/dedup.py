@@ -1,4 +1,5 @@
-"""Document deduplication family for training-data pipelines.
+"""Document deduplication family for training-data pipelines, and the one
+MinHash-LSH core every MinHash caller in the package runs on.
 
 All variants are pure DataFrame expressions (whole-stage codegen, no UDFs)
 built on engine-portable md5 hashing so each has a bit-exact DuckDB oracle:
@@ -10,18 +11,79 @@ built on engine-portable md5 hashing so each has a bit-exact DuckDB oracle:
   - SimHash:       16-bit simhash over tokens (md5-derived bits)
   - n-gram Jaccard: token-trigram set overlap over blocked pairs
   - embedding cosine: see operators/similarity.py
+
+The MinHash-LSH core, each step defined once here:
+
+  band_stack       (id, shingles) -> pinned (id, band_key)
+  cap_buckets      window-count bucket cap
+  dropped_buckets  (band_key, bucket_size) of the buckets the cap drops
+  bucket_pairs     band self-join (src < dst) or new x index join, distinct
+  jaccard_pairs    exact shingle-Jaccard check, ratio rounded to 6 places
+
+Callers: `minhash_lsh_pairs`, `lsh_dropped_buckets` and
+`cross_corpus_near_dups` here, on document shingles (`_minhash_band_stack`
+is their pinned front), and canonicalize.py's `lsh_candidate_edges` and
+`canonicalize_mentions`, on surface shingles. `simhash_near_dup_pairs`
+uses `cap_buckets` on its (band_idx, band_val) buckets.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .canonicalize import char_shingles_col, with_minhash_signature
+from ..functions.hashing import MINHASH_AB, MINHASH_PRIME
 
 
 def normalize_text(col):
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
+def char_shingles_col(col, k: int = 3):
+    """Distinct k-char shingles as an array column (whole-stage codegen,
+    no UDF): substring windows over 1..len-k+1."""
+    return F.array_distinct(
+        F.when(F.length(col) < k, F.array(col)).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), F.length(col) - (k - 1)),
+                lambda i: col.substr(i, F.lit(k)),
+            )
+        )
+    )
+
+
+def _minhash_struct_col(shingle_col: str, num_hashes: int):
+    """Portable universal-hash MinHash (functions/hashing.py semantics):
+    component i = min over shingles of (a_i * int(md5(sh)[:8],16) + b_i) mod P.
+    All components in ONE fold: aggregate over the base-hash array (the
+    md5 pass runs once per row), the bound element reused by every affine
+    term, BIGINT integer math only. Built from one SQL string: one JVM call
+    instead of one per expression node of a Column-built fold."""
+    names = [f"mh{i}" for i in range(num_hashes)]
+    init = ", ".join(f"'{n}', {MINHASH_PRIME}L" for n in names)
+    merge = ", ".join(
+        f"'{n}', least(acc.{n}, (h * {a}L + {b}L) % {MINHASH_PRIME}L)"
+        for n, (a, b) in zip(names, MINHASH_AB)
+    )
+    return F.expr(
+        f"aggregate(transform(`{shingle_col}`, "
+        "x -> CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT)), "
+        f"named_struct({init}), (acc, h) -> named_struct({merge}))"
+    )
+
+
+def with_minhash_signature(df, shingle_col: str, num_hashes: int = 16):
+    """Adds mh0..mh{n-1} long columns in a single pass over the shingles.
+
+    The struct is surfaced through F.inline(F.array(...)) — a generator is
+    evaluated once per row, whereas selecting N getFields of a struct
+    expression lets CollapseProject duplicate the whole aggregate (and its
+    md5 pass) into every component column. No caching or checkpoint barrier
+    is needed, so nothing large stays pinned in executor memory."""
+    return df.select(
+        *df.columns,
+        F.inline(F.array(_minhash_struct_col(shingle_col, num_hashes))),
+    )
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -40,6 +102,125 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def band_stack(
+    base: DataFrame, id_col: str, num_hashes: int, band_size: int
+) -> DataFrame:
+    """(id, shingles) -> (id, band_key), one row per (row, band), pinned.
+
+    Band b's key is "b|mh..|mh.." over components b*band_size onward, the
+    hashing.lsh_band_keys form (the band index prefix keeps bands from
+    colliding with each other); a trailing partial band is not keyed. The
+    stack is read by the bucket cap's window, its audit, and both sides of
+    the bucket join, so it is pinned once (a lazy local checkpoint: it
+    materializes on the first action that reads it)."""
+    sig = with_minhash_signature(
+        base.select(id_col, "shingles"), "shingles", num_hashes
+    )
+    band_keys = [
+        F.concat_ws(
+            "|",
+            F.lit(str(b)),
+            *[
+                F.col(f"mh{i}").cast("string")
+                for i in range(b * band_size, (b + 1) * band_size)
+            ],
+        )
+        for b in range(num_hashes // band_size)
+    ]
+    return sig.select(
+        id_col, F.explode(F.array(*band_keys)).alias("band_key")
+    ).localCheckpoint(eager=False)
+
+
+def cap_buckets(
+    stacked: DataFrame, max_bucket: int | None, *keys: str
+) -> DataFrame:
+    """Drop the rows of buckets (keys, default band_key) holding more than
+    `max_bucket` rows; None keeps every bucket (exact). One viral cluster
+    sharing a bucket would otherwise make the bucket join quadratic. The
+    count is a window over the bucket key, i.e. inside the same hash
+    partitioning the bucket join needs: no extra exchange."""
+    if max_bucket is None:
+        return stacked
+    keys = keys or ("band_key",)
+    return (
+        stacked.withColumn(
+            "_bsz", F.count(F.lit(1)).over(Window.partitionBy(*keys))
+        )
+        .where(F.col("_bsz") <= max_bucket)
+        .drop("_bsz")
+    )
+
+
+def dropped_buckets(stacked: DataFrame, max_bucket: int) -> DataFrame:
+    """(band_key, bucket_size) of the band buckets `cap_buckets` drops."""
+    return (
+        stacked.groupBy("band_key")
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .where(F.col("bucket_size") > max_bucket)
+    )
+
+
+def bucket_pairs(
+    stacked: DataFrame,
+    id_col: str,
+    src: str,
+    dst: str,
+    fan_out: bool,
+    other: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct (src, dst) pairs sharing a band key: the band self-join of
+    `stacked` keeping src < dst, or with `other` the stacked x other join.
+
+    `fan_out` adds a keyed repartition to 4 x defaultParallelism ahead of
+    the distinct: the pair stream explodes out of a small input, so AQE
+    (sizing from the INPUT bytes) would coalesce the post-join stages to a
+    few tasks; a user-specified partition count is never coalesced, and the
+    distinct and the Jaccard joins inherit it. Document pairs want it; on
+    the small surface graph of canonicalize it only adds tasks."""
+    right = stacked if other is None else other
+    pairs = stacked.select("band_key", F.col(id_col).alias(src)).join(
+        right.select("band_key", F.col(id_col).alias(dst)), "band_key"
+    )
+    if other is None:
+        pairs = pairs.where(F.col(src) < F.col(dst))
+    pairs = pairs.select(src, dst)
+    if fan_out:
+        n_out = stacked.sparkSession.sparkContext.defaultParallelism * 4
+        pairs = pairs.repartition(n_out, src, dst)
+    return pairs.dropDuplicates([src, dst])
+
+
+def jaccard_pairs(
+    pairs: DataFrame,
+    src_base: DataFrame,
+    dst_base: DataFrame,
+    id_col: str,
+    src: str,
+    dst: str,
+    threshold: float,
+) -> DataFrame:
+    """(src, dst, jaccard): the pairs whose EXACT shingle-set Jaccard is
+    >= threshold, read from each side's (id, shingles) table. The threshold
+    is applied to the unrounded ratio, as the SQL oracles do; only the
+    output column is rounded to 6 places."""
+    src_sh = src_base.select(
+        F.col(id_col).alias(src), F.col("shingles").alias("_src_sh")
+    )
+    dst_sh = dst_base.select(
+        F.col(id_col).alias(dst), F.col("shingles").alias("_dst_sh")
+    )
+    inter = F.size(F.array_intersect(F.col("_src_sh"), F.col("_dst_sh")))
+    union = F.size(F.col("_src_sh")) + F.size(F.col("_dst_sh")) - inter
+    return (
+        pairs.join(src_sh, src)
+        .join(dst_sh, dst)
+        .withColumn("_j", inter / union)
+        .where(F.col("_j") >= threshold)
+        .select(src, dst, F.round(F.col("_j"), 6).alias("jaccard"))
+    )
+
+
 def _minhash_band_stack(
     df: DataFrame,
     id_col: str,
@@ -47,25 +228,22 @@ def _minhash_band_stack(
     shingle_k: int,
     num_hashes: int,
     band_size: int,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared front of the MinHash-LSH pipeline: returns
+) -> tuple[DataFrame, DataFrame]:
+    """The document front of the core: (base, stacked), where base is the
+    pinned (doc_id, shingles) of the normalized documents — the band stack
+    and both sides of the Jaccard check read it — and stacked its
+    `band_stack`.
 
-      base    (doc_id, shingles)           — lazy-checkpointed
-      sig     (doc_id, mh0..mh{n-1})       — lazy-checkpointed
-      stacked (doc_id, band_key)           — one row per (doc, band)
-
-    Lazy checkpoints break lineage for the multiply-referenced tables
-    without eagerly pinning blocks in executor memory."""
+    Pinning base also keeps Catalyst's CollapseProject (which treats
+    transform() lambdas as cheap) from inlining the shingle expression into
+    every consumer. The normalize regex is projected to a plain column
+    FIRST: fed as an expression, char_shingles_col references it per
+    shingle ELEMENT and the regex would run ~len(text) times per document
+    (measured 3.6x on the whole base pass); a multiply-referenced non-cheap
+    alias is kept out of line by CollapseProject, so this stays one regex
+    per row."""
     from ..plans.skew import ensure_parallelism
 
-    # materialize the shingle table: Catalyst's CollapseProject treats
-    # transform() lambdas as cheap and would otherwise inline the shingle
-    # expression into every salt's digest pass (multiplicative recompute).
-    # The normalize regex is projected to a plain column FIRST: fed as an
-    # expression, char_shingles_col references it per shingle ELEMENT and
-    # the regex would run ~len(text) times per document (measured 3.6x on
-    # the whole base pass); a multiply-referenced non-cheap alias is kept
-    # out of line by CollapseProject, so this stays one regex per row.
     base = (
         ensure_parallelism(df)
         .select(
@@ -78,29 +256,7 @@ def _minhash_band_stack(
         )
         .localCheckpoint(eager=False)
     )
-    mh_names = [f"mh{i}" for i in range(num_hashes)]
-    sig = (
-        with_minhash_signature(base, "shingles", num_hashes)
-        .select("doc_id", *mh_names)
-        .localCheckpoint(eager=False)
-    )
-    n_bands = num_hashes // band_size
-    band_cols = [
-        F.concat_ws(
-            "|",
-            F.lit(str(b)),
-            *[
-                F.col(f"mh{i}").cast("string")
-                for i in range(b * band_size, (b + 1) * band_size)
-            ],
-        ).alias(f"band{b}")
-        for b in range(n_bands)
-    ]
-    # shuffle only (doc_id, band_key) through the bucket join
-    stacked = sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band_key")
-    )
-    return base, sig, stacked
+    return base, band_stack(base, "doc_id", num_hashes, band_size)
 
 
 def lsh_dropped_buckets(
@@ -115,14 +271,10 @@ def lsh_dropped_buckets(
     """(band_key, bucket_size) of the band buckets `minhash_lsh_pairs` drops
     under the same parameters — write this next to the pair output so capped
     boilerplate clusters are auditable rather than silently skipped."""
-    _, _, stacked = _minhash_band_stack(
+    _, stacked = _minhash_band_stack(
         df, id_col, text_col, shingle_k, num_hashes, band_size
     )
-    return (
-        stacked.groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .where(F.col("bucket_size") > max_bucket)
-    )
+    return dropped_buckets(stacked, max_bucket)
 
 
 def minhash_lsh_pairs(
@@ -133,103 +285,28 @@ def minhash_lsh_pairs(
     num_hashes: int = 16,
     band_size: int = 4,
     jaccard_threshold: float = 0.5,
-    min_sig_matches: int | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (src_id < dst_id) verified by shingle
-    Jaccard. shingle -> minhash -> band -> bucket-join -> signature
-    pre-filter -> exact verify: the standard web-dedup pipeline, DataFrame
-    ops only.
-
-    The pre-filter drops band-collision pairs whose full signatures agree on
-    fewer than `min_sig_matches` of `num_hashes` components (default
-    num_hashes/4, i.e. estimated jaccard well under threshold) BEFORE the
-    exact verification joins the shingle arrays back: at scale, shuffling
-    shingle arrays for false-positive pairs is the dominant cost. Identical
-    docs match all components, so exact-dup recall is unaffected.
+    Jaccard. shingle -> minhash -> band -> bucket-join -> exact verify: the
+    standard web-dedup pipeline, DataFrame ops only.
 
     `max_bucket=None` (the default) is EXACT: every band bucket self-joins,
     and the result is bit-identical to the SQL oracle. At corpus scale, pass
     a cap: band buckets larger than `max_bucket` are dropped before the
-    self-join (same cap as canonicalize.lsh_candidate_edges) — one viral
+    self-join (`cap_buckets`, shared with canonicalize) — one viral
     boilerplate cluster sharing a band key would otherwise make the bucket
     self-join quadratic. Dropped buckets are observable, not silent —
-    `lsh_dropped_buckets` returns their (band_key, size) for lineage. The
-    cap is computed as a window count over band_key, i.e. inside the SAME
-    shuffle the self-join needs — no extra groupBy+join pass."""
-    if min_sig_matches is None:
-        min_sig_matches = max(1, num_hashes // 4)
-    base, sig, stacked = _minhash_band_stack(
+    `lsh_dropped_buckets` returns their (band_key, size) for lineage."""
+    base, stacked = _minhash_band_stack(
         df, id_col, text_col, shingle_k, num_hashes, band_size
     )
-    mh_names = [f"mh{i}" for i in range(num_hashes)]
-    if max_bucket is not None:
-        # cap pathological buckets BEFORE the self-join (quadratic
-        # otherwise); the window's hash partitioning on band_key is exactly
-        # what the self-join requires, so this adds no exchange
-        from pyspark.sql import Window
-
-        stacked = (
-            stacked.withColumn(
-                "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band_key"))
-            )
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    a = stacked.select("band_key", F.col("doc_id").alias("src_id"))
-    b_ = stacked.select("band_key", F.col("doc_id").alias("dst_id"))
-    # explicit keyed repartition ahead of the dedup aggregation: the pair
-    # stream explodes out of a small input, so AQE (sizing from the INPUT
-    # bytes) would coalesce the post-join stages to a few tasks; the
-    # user-specified partition count is never coalesced, the dedup agg and
-    # every verify stage below inherit it
-    n_out = df.sparkSession.sparkContext.defaultParallelism * 4
-    pairs = (
-        a.join(b_, "band_key")
-        .where(F.col("src_id") < F.col("dst_id"))
-        .select("src_id", "dst_id")
-        .repartition(n_out, "src_id", "dst_id")
-        .dropDuplicates(["src_id", "dst_id"])
+    pairs = bucket_pairs(
+        cap_buckets(stacked, max_bucket), "doc_id", "src_id", "dst_id",
+        fan_out=True,
     )
-    if min_sig_matches > band_size:
-        # signature pre-filter: 16 short strings per side instead of
-        # shingle arrays. Only built when it can actually drop anything: a
-        # band collision already implies band_size matching components, so
-        # for min_sig_matches <= band_size the filter is an algebraic no-op
-        # and the two signature joins would be pure per-pair overhead.
-        src_sig = sig.select(
-            F.col("doc_id").alias("src_id"),
-            *[F.col(m).alias(f"s_{m}") for m in mh_names],
-        )
-        dst_sig = sig.select(
-            F.col("doc_id").alias("dst_id"),
-            *[F.col(m).alias(f"d_{m}") for m in mh_names],
-        )
-        with_sigs = pairs.join(src_sig, "src_id").join(dst_sig, "dst_id")
-        matches = None
-        for m in mh_names:
-            term = F.when(F.col(f"s_{m}") == F.col(f"d_{m}"), 1).otherwise(0)
-            matches = term if matches is None else matches + term
-        prefiltered = (
-            with_sigs.withColumn("_sig_matches", matches)
-            .where(F.col("_sig_matches") >= min_sig_matches)
-            .select("src_id", "dst_id")
-        )
-    else:
-        prefiltered = pairs
-    src_sh = base.select(
-        F.col("doc_id").alias("src_id"), F.col("shingles").alias("src_sh")
-    )
-    dst_sh = base.select(
-        F.col("doc_id").alias("dst_id"), F.col("shingles").alias("dst_sh")
-    )
-    verified = prefiltered.join(src_sh, "src_id").join(dst_sh, "dst_id")
-    inter = F.size(F.array_intersect(F.col("src_sh"), F.col("dst_sh")))
-    union = F.size(F.col("src_sh")) + F.size(F.col("dst_sh")) - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("src_id", "dst_id", "jaccard")
+    return jaccard_pairs(
+        pairs, base, base, "doc_id", "src_id", "dst_id", jaccard_threshold
     )
 
 
@@ -375,19 +452,7 @@ def simhash_near_dup_pairs(
             )
         ).alias("bd"),
     ).select("doc_id", "simhash", "bd.band_idx", "bd.band_val")
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        bands = (
-            bands.withColumn(
-                "_bsz",
-                F.count(F.lit(1)).over(
-                    Window.partitionBy("band_idx", "band_val")
-                ),
-            )
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
+    bands = cap_buckets(bands, max_bucket, "band_idx", "band_val")
     # explicit keyed repartition of the probe side: the bucket self-join
     # fans out quadratically per bucket from a tiny input, so AQE (sizing
     # from input bytes) would coalesce the pair-generating stage to a
@@ -452,55 +517,22 @@ def cross_corpus_near_dups(
     Returns (new_id, index_id, jaccard) for verified pairs over the
     threshold. `max_bucket` caps each side's contribution to a band
     bucket (boilerplate shared across crawls is the usual degenerate key);
-    drops are auditable via lsh_dropped_buckets on the union.
+    drops are auditable via lsh_dropped_buckets on each side (a bucket's
+    size in the union can exceed the cap while neither side's does).
     """
-    nb, ns, nstack = _minhash_band_stack(
+    new_base, new_stack = _minhash_band_stack(
         new_docs, id_col, text_col, shingle_k, num_hashes, band_size
     )
-    ib, _is, istack = _minhash_band_stack(
+    idx_base, idx_stack = _minhash_band_stack(
         index_docs, id_col, text_col, shingle_k, num_hashes, band_size
     )
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        def cap(stacked):
-            return (
-                stacked.withColumn(
-                    "_bsz",
-                    F.count(F.lit(1)).over(Window.partitionBy("band_key")),
-                )
-                .where(F.col("_bsz") <= max_bucket)
-                .drop("_bsz")
-            )
-
-        nstack, istack = cap(nstack), cap(istack)
-    # explicit keyed repartition before the dedup aggregation (same
-    # reasoning as minhash_lsh_pairs: the bucket join fans out of a tiny
-    # input, AQE would coalesce the pair stages to a few tasks)
-    n_out = new_docs.sparkSession.sparkContext.defaultParallelism * 4
-    pairs = (
-        nstack.select("band_key", F.col("doc_id").alias("new_id"))
-        .join(
-            istack.select("band_key", F.col("doc_id").alias("index_id")),
-            "band_key",
-        )
-        .select("new_id", "index_id")
-        .repartition(n_out, "new_id", "index_id")
-        .dropDuplicates(["new_id", "index_id"])
+    pairs = bucket_pairs(
+        cap_buckets(new_stack, max_bucket), "doc_id", "new_id", "index_id",
+        fan_out=True, other=cap_buckets(idx_stack, max_bucket),
     )
-    new_sh = nb.select(
-        F.col("doc_id").alias("new_id"), F.col("shingles").alias("new_sh")
-    )
-    idx_sh = ib.select(
-        F.col("doc_id").alias("index_id"), F.col("shingles").alias("idx_sh")
-    )
-    verified = pairs.join(new_sh, "new_id").join(idx_sh, "index_id")
-    inter = F.size(F.array_intersect(F.col("new_sh"), F.col("idx_sh")))
-    union = F.size("new_sh") + F.size("idx_sh") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "index_id", "jaccard")
+    return jaccard_pairs(
+        pairs, new_base, idx_base, "doc_id", "new_id", "index_id",
+        jaccard_threshold,
     )
 
 

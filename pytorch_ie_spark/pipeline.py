@@ -34,10 +34,6 @@ class KgPipelineConfig:
     max_window: int = 128
     window_overlap: int = 16
     max_candidate_distance: int | None = 200
-    # char window centered on each candidate pair at relation-encode time
-    # (None = whole document; set for long-document corpora so the
-    # classifier context is bounded regardless of file size)
-    re_max_window: int | None = None
     canonicalize: bool = True
     # 0.8 keeps near-identical variants together but distinct entities with a
     # shared prefix ("entity a" vs "entity g" = 0.714) apart; true aliases are
@@ -50,13 +46,9 @@ class KgPipelineConfig:
     #                (operators/entity_linking_gen.py); ids are
     #                'gen:<decoded KB entity>'.
     linker: str = "lsh"
-    # candidate-entity KB for the generative linker (None -> ENTITY_KB)
-    linker_kb: list | None = None
-    linker_beam_size: int = 1
     none_label: str = "no_relation"
     # skew handling
     salt_partitions: int | None = None
-    size_bucket_width: int = 1024
 
 
 def run_kg_pipeline(
@@ -87,7 +79,7 @@ def run_kg_pipeline(
         # size-bucket so UDF partitions are even
         if cfg.salt_partitions:
             docs = salted_repartition(docs, "doc_id", num_partitions=cfg.salt_partitions)
-        docs = size_bucketed(docs, F.length("text"), cfg.size_bucket_width)
+        docs = size_bucketed(docs, F.length("text"))
         return docs
 
     def once(df: DataFrame) -> DataFrame:
@@ -121,7 +113,6 @@ def run_kg_pipeline(
             model_config=cfg.re_model_config,
             max_distance=cfg.max_candidate_distance,
             none_label=cfg.none_label,
-            max_window=cfg.re_max_window,
         )
 
     relations = once(stage("relations", build_relations))
@@ -137,8 +128,6 @@ def run_kg_pipeline(
             entity_map = once(
                 link_entities_generative(
                     mentions,
-                    kb=cfg.linker_kb,
-                    beam_size=cfg.linker_beam_size,
                     id_col="mention_id",
                 ).select(
                     "mention_id",

@@ -23,11 +23,13 @@ from pyspark.sql import Window as W
 from .operators.candidates import candidate_pairs
 from .operators.canonicalize import connected_components, normalize_surface
 from .operators.dedup import (
+    char_shingles_col,
     exact_duplicates,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     normalize_text,
     simhash16,
+    with_minhash_signature,
 )
 from .operators.metrics import pr_f1
 from .operators.similarity import (
@@ -37,7 +39,6 @@ from .operators.similarity import (
     ivf_topk,
 )
 from .functions.hashing import MINHASH_AB, MINHASH_PRIME
-from .operators.canonicalize import char_shingles_col, with_minhash_signature
 from .sources.readers import read_table
 from .streaming.sessions import sessionize
 

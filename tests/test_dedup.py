@@ -45,28 +45,37 @@ def test_minhash_pairs_detect_near_duplicates(spark):
 
 
 def test_minhash_signature_matches_python(spark):
-    """Both Spark MinHash forms equal the plain-Python minhash_signature:
-    the per-component minhash_signature_cols and the one-fold
-    with_minhash_signature at 16 components, on several texts including
-    one shorter than the shingle width."""
-    from pytorch_ie_spark.operators.canonicalize import (
+    """with_minhash_signature equals the plain-Python minhash_signature at
+    4 and at 16 components, on several texts including one shorter than
+    the shingle width."""
+    from pytorch_ie_spark.operators.dedup import (
         char_shingles_col,
-        minhash_signature_cols,
+        normalize_text,
         with_minhash_signature,
     )
-    from pytorch_ie_spark.operators.dedup import normalize_text
 
     texts = ["some example document text", "abc", "the quick brown fox", "aaaaaaaa"]
     sh = _docs(spark, texts).select(
         "doc_id", char_shingles_col(normalize_text(F.col("text")), 5).alias("sh")
     )
-    per_col = sh.select("doc_id", *minhash_signature_cols(F.col("sh"), 4))
-    folded = with_minhash_signature(sh, "sh", 16)
-    for df, n in ((per_col, 4), (folded, 16)):
+    for n in (4, 16):
+        df = with_minhash_signature(sh, "sh", n)
         got = {r["doc_id"]: [r[f"mh{i}"] for i in range(n)] for r in df.collect()}
         assert got == {
             i: minhash_signature(char_shingles(t, 5), n) for i, t in enumerate(texts)
         }
+
+
+def test_minhash_threshold_applies_to_exact_jaccard(spark):
+    """The Jaccard threshold is compared with the exact ratio, as the SQL
+    oracle does, not with the 6-place rounded output: "abcdef" and
+    "abcdefg" share 2 of 3 5-shingles, and 2/3 < 0.6666667 although
+    round(2/3, 6) = 0.666667 is not."""
+    df = _docs(spark, ["abcdef", "abcdefg"])
+    at = minhash_lsh_pairs(df, "doc_id", "text", jaccard_threshold=0.6666666)
+    assert [tuple(r) for r in at.collect()] == [(0, 1, 0.666667)]
+    above = minhash_lsh_pairs(df, "doc_id", "text", jaccard_threshold=0.6666667)
+    assert above.collect() == []
 
 
 def test_simhash_matches_python(spark):

@@ -116,3 +116,41 @@ def test_cross_corpus_flags_only_cross_side_pairs(spark):
     # index-index near-dup (100, 101) must NOT appear
     assert got == {(1, 100), (1, 101)}
     assert all(r["jaccard"] >= 0.5 for r in out)
+
+
+def _viral_pairs(pairs):
+    return {(a, b) for a, b in pairs
+            if a % 10 < 10 * VIRAL_FRACTION and b % 10 < 10 * VIRAL_FRACTION}
+
+
+def test_simhash_cap_drops_viral_buckets(spark):
+    from pytorch_ie_spark.operators.dedup import simhash_near_dup_pairs
+
+    docs = _skewed_docs(spark)
+    exact = {(r["src_id"], r["dst_id"]) for r in
+             simhash_near_dup_pairs(docs, "doc_id", "text").collect()}
+    capped = {(r["src_id"], r["dst_id"]) for r in simhash_near_dup_pairs(
+        docs, "doc_id", "text", max_bucket=MAX_BUCKET).collect()}
+    assert capped < exact
+    n_viral = int(N_DOCS * VIRAL_FRACTION)
+    assert len(_viral_pairs(exact)) >= n_viral * (n_viral - 1) / 2 * 0.9
+    # every band bucket the viral cluster shares is over the cap
+    assert _viral_pairs(capped) == set()
+
+
+def test_cross_corpus_cap_drops_viral_buckets(spark):
+    from pytorch_ie_spark.operators.dedup import cross_corpus_near_dups
+
+    docs = _skewed_docs(spark)
+    new = docs.where(F.col("doc_id") % 3 == 0)
+    index = docs.where(F.col("doc_id") % 3 != 0)
+    exact = {(r["new_id"], r["index_id"]) for r in
+             cross_corpus_near_dups(new, index).collect()}
+    capped = {(r["new_id"], r["index_id"]) for r in cross_corpus_near_dups(
+        new, index, max_bucket=MAX_BUCKET).collect()}
+    assert capped < exact
+    # the cap is per side: the ~20 new and ~40 index viral docs each fill
+    # an over-cap bucket, so the mega-cluster's pairs go; the few left
+    # share a small bucket too (tails "tail30"/"tail31" are near-dups)
+    assert len(_viral_pairs(exact)) >= 700
+    assert len(_viral_pairs(capped)) <= len(_viral_pairs(exact)) * 0.01
