@@ -5,33 +5,47 @@ analogs are the coref similarity scoring in cross_text_binary_coref.py and
 the merge+dedup in utils/document.py:76-144):
 
   1. normalize surface forms (JVM-side string expressions),
-  2. entity linking against a broadcast alias dictionary (equi-join),
+  2. entity linking against a broadcast alias dictionary (equi-join; an
+     alias key shared by several entities links the minimum entity id),
   3. MinHash-LSH blocking over char-shingles of the normalized surface ->
-     candidate equivalence edges within LSH buckets, and
-  4. verify edges by exact Jaccard on shingle sets — both steps are the
-     MinHash-LSH core of operators/dedup.py (band stack, bucket cap, band
-     self-join, Jaccard check); `lsh_candidate_edges` reports the verified
-     `jaccard` rounded to 6 places, as the document dedup does,
-  5. connected components: driver union-find below a bounded edge count,
-     else alternating large-star/small-star rounds; either way a component
-     is labelled with its minimum node,
+     candidate equivalence edges within (capped) LSH buckets,
+  4. verify edges by exact Jaccard on shingle sets,
+  5. connected components, each labelled with its minimum node,
   6. entity_id = 'sf:' + the component label, i.e. the lexicographic min
      normalized form per component (null for an empty normalized form).
 
-Scale notes: every step is a shuffle on a bounded key (band key / node id);
-bucket sizes are capped (`max_bucket`) so a degenerate band (stopword-ish
-surface) cannot produce a quadratic pair explosion — dropped buckets are
-logged, not silent.
+Hybrid execution, one bound (`DRIVER_BOUND`): the distinct-surface table
+of a corpus is small next to its mentions, so `canonicalize_mentions`
+fetches it with one bounded `limit(DRIVER_BOUND + 1).collect()`. At or
+under the bound, steps 3-5 run on the driver (`_driver_surface_components`:
+the band stack, the bucket cap and its audit, pair generation, the Jaccard
+check and the union-find), provided the capped candidate pairs
+(sum of C(n, 2) over the kept buckets, known before any pair is built)
+also fit under the bound; the result returns as one Arrow-built
+LocalRelation. Otherwise steps 3-5 run in Spark on the same pinned
+surfaces (`_spark_surface_components`): the MinHash-LSH core of
+operators/dedup.py (band stack, bucket cap, band self-join, Jaccard
+check), then `connected_components`, itself a driver union-find below
+`DRIVER_BOUND` edges and large-star/small-star rounds above it. Both paths
+give the same components (asserted in tests/test_canonicalize.py).
+
+Scale notes: bucket sizes are capped (`max_bucket`) so a degenerate band
+(stopword-ish surface) cannot produce a quadratic pair explosion — dropped
+buckets are logged, not silent.
 """
 
 from __future__ import annotations
 
 import logging
+from collections import defaultdict
+from itertools import combinations
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import MINHASH_AB, MINHASH_PRIME, char_shingles, md5_hex
 from .dedup import (
     band_stack,
     bucket_pairs,
@@ -42,6 +56,14 @@ from .dedup import (
 )
 
 logger = logging.getLogger(__name__)
+
+#: the most distinct surfaces, and the most capped candidate pairs, that
+#: `canonicalize_mentions` canonicalizes on the driver; also the edge bound
+#: of `connected_components`' driver union-find
+DRIVER_BOUND = 100_000
+
+# the surface MinHash: 16 components in 4 bands of 4
+_NUM_HASHES, _BAND_SIZE = 16, 4
 
 
 def normalize_surface(col):
@@ -59,11 +81,19 @@ def link_entities(
     """Dictionary entity linking: normalized-surface equi-join against a small
     alias table — broadcast by hint (the dictionary is the 'small dim'). An
     alias that normalizes to "" links nothing (it would match every surface
-    with no Latin letter or digit)."""
-    aliases = alias_dict.select(
-        normalize_surface(F.col(alias_col)).alias("_norm"),
-        F.col(entity_col).alias("linked_entity_id"),
-    ).where(F.col("_norm") != "").dropDuplicates(["_norm"])
+    with no Latin letter or digit); aliases that normalize to the same key
+    link the minimum of their entity ids."""
+    aliases = (
+        alias_dict.select(
+            normalize_surface(F.col(alias_col)).alias("_norm"),
+            F.col(entity_col).alias("_eid"),
+        )
+        .where(F.col("_norm") != "")
+        # aliases that collide after normalization link the minimum id,
+        # whatever the row order or partitioning of the dictionary
+        .groupBy("_norm")
+        .agg(F.min("_eid").alias("linked_entity_id"))
+    )
     m = mentions.withColumn("_norm", normalize_surface(F.col("surface")))
     return m.join(F.broadcast(aliases), "_norm", "left").drop("_norm")
 
@@ -115,12 +145,85 @@ def lsh_candidate_edges(
     return _verified_edges(base, stacked, jaccard_threshold, max_bucket)
 
 
-def _driver_side_components(spark, edge_rows) -> DataFrame:
+def _warn_dropped(max_bucket: int, n_buckets: int, n_rows: int) -> None:
+    if n_buckets:
+        logger.warning(
+            "canonicalize_mentions: max_bucket=%d dropped %d band "
+            "bucket(s) covering %d surface-band rows — entity-id "
+            "assignment is approximate for those surfaces",
+            max_bucket, n_buckets, n_rows,
+        )
+
+
+def _minhash_rows(shingle_sets: list[frozenset], num_hashes: int) -> np.ndarray:
+    """(n, num_hashes) int64: `hashing.minhash_signature` of each non-empty
+    set. One md5 per distinct shingle; per component one vectorized affine
+    map over every shingle and a per-set min (a * base < 2^62: no
+    overflow)."""
+    base = {sh: int(md5_hex(sh)[:8], 16) for sh in frozenset().union(*shingle_sets)}
+    flat = np.fromiter(
+        (base[sh] for s in shingle_sets for sh in s), dtype=np.int64
+    )
+    starts = np.cumsum([0] + [len(s) for s in shingle_sets[:-1]])
+    return np.stack(
+        [
+            np.minimum.reduceat((a * flat + b) % MINHASH_PRIME, starts)
+            for a, b in MINHASH_AB[:num_hashes]
+        ],
+        axis=1,
+    )
+
+
+def _driver_surface_components(
+    spark,
+    surfaces: list,
+    shingle_k: int,
+    jaccard_threshold: float,
+    max_bucket: int | None,
+) -> DataFrame | None:
+    """Steps 3-5 on the driver over the collected distinct surfaces, with
+    the Spark path's semantics: the band stack (4 bands of 4 MinHash
+    components), buckets of more than `max_bucket` members dropped and
+    logged, src < dst pairs of the kept buckets, the unrounded Jaccard
+    check, and the union-find. Returns the (surface_norm, component) map
+    ("" and null keep themselves), or None when the capped candidate pairs
+    exceed DRIVER_BOUND."""
+    # sorted, so a pair of member indices i < j is the pair src < dst
+    nodes = sorted(s for s in surfaces if s)
+    # char_shingles_col's sets: normalized surfaces are already lowercase
+    sets = [frozenset(char_shingles(s, shingle_k)) for s in nodes]
+    buckets = defaultdict(list)
+    if nodes:
+        sig = _minhash_rows(sets, _NUM_HASHES).tolist()
+        for i, row in enumerate(sig):
+            for lo in range(0, _NUM_HASHES, _BAND_SIZE):
+                buckets[(lo, *row[lo : lo + _BAND_SIZE])].append(i)
+    kept = [
+        m for m in buckets.values() if max_bucket is None or len(m) <= max_bucket
+    ]
+    if sum(len(m) * (len(m) - 1) // 2 for m in kept) > DRIVER_BOUND:
+        return None
+    if max_bucket is not None:
+        over = [len(m) for m in buckets.values() if len(m) > max_bucket]
+        _warn_dropped(max_bucket, len(over), sum(over))
+    candidates = {pair for m in kept for pair in combinations(m, 2)}
+    edges = []
+    for i, j in candidates:
+        inter = len(sets[i] & sets[j])
+        if inter / (len(sets[i]) + len(sets[j]) - inter) >= jaccard_threshold:
+            edges.append((nodes[i], nodes[j]))
+    return _driver_side_components(spark, edges, surfaces).toDF(
+        "surface_norm", "component"
+    )
+
+
+def _driver_side_components(spark, edge_rows, nodes=()) -> DataFrame:
     """Union-find on the driver for small graphs — identical output contract
     (component = min node label: a union parents the larger root to the
-    smaller). Returned from an Arrow table, i.e. a LocalRelation the
+    smaller). `nodes` adds vertices, edged or not: a singleton is its own
+    component. Returned from an Arrow table, i.e. a LocalRelation the
     optimizer can size and broadcast, not a pickled Python RDD."""
-    parent: dict[str, str] = {}
+    parent = {n: n for n in nodes}
 
     def find(x: str) -> str:
         root = x
@@ -131,15 +234,14 @@ def _driver_side_components(spark, edge_rows) -> DataFrame:
         return root
 
     for src, dst in edge_rows:
-        for n in (src, dst):
-            if n not in parent:
-                parent[n] = n
+        parent.setdefault(src, src)
+        parent.setdefault(dst, dst)
         ra, rb = find(src), find(dst)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    nodes = list(parent)
+    names = list(parent)
     schema = pa.schema([("node", pa.string()), ("component", pa.string())])
-    table = pa.table([nodes, [find(n) for n in nodes]], schema=schema)
+    table = pa.table([names, [find(n) for n in names]], schema=schema)
     return spark.createDataFrame(table)
 
 
@@ -226,7 +328,7 @@ def connected_components_star(
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, driver_threshold: int = 100_000
+    edges: DataFrame, max_iter: int = 25, driver_threshold: int = DRIVER_BOUND
 ) -> DataFrame:
     """(src, dst) string edges -> (node, component = min node label).
 
@@ -253,6 +355,39 @@ def connected_components(
     return connected_components_star(und, max_iter=max_iter)
 
 
+def _spark_surface_components(
+    surfaces: DataFrame,
+    shingle_k: int,
+    jaccard_threshold: float,
+    max_bucket: int | None,
+) -> DataFrame:
+    """Steps 3-5 in Spark over the pinned distinct surfaces: the
+    (surface_norm, component) map, "" and null keeping themselves."""
+    # ONE pinned band stack shared between the audit aggregate and the
+    # candidate self-join
+    base = _surface_shingles(surfaces, "surface_norm", shingle_k)
+    stacked = band_stack(base, "node", _NUM_HASHES, _BAND_SIZE)
+    if max_bucket is not None:
+        # .first(), not DataFrame.observe: an observation fails when AQE
+        # prunes the observed branch on tiny input
+        dropped = (
+            dropped_buckets(stacked, max_bucket)
+            .agg(
+                F.count(F.lit(1)).alias("n_buckets"),
+                F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("n_rows"),
+            )
+            .first()
+        )
+        _warn_dropped(max_bucket, dropped["n_buckets"], dropped["n_rows"])
+    edges = _verified_edges(base, stacked, jaccard_threshold, max_bucket)
+    comps = connected_components(edges)
+    # singletons (no edges) keep themselves as component
+    return surfaces.join(comps, surfaces.surface_norm == comps.node, "left").select(
+        "surface_norm",
+        F.coalesce(F.col("component"), F.col("surface_norm")).alias("component"),
+    )
+
+
 def canonicalize_mentions(
     mentions: DataFrame,
     shingle_k: int = 3,
@@ -265,19 +400,23 @@ def canonicalize_mentions(
     mention_entity_map: (mention_id, entity_id) where entity_id is the linked
     dictionary id when available, else 'sf:' + the label of the mention's
     connected component (its minimum normalized surface), else null for a
-    surface that normalizes to the empty string.
+    surface that normalizes to the empty string. components:
+    (surface_norm, component) per distinct normalized surface.
 
     This is a corpus-scale entry point, so the LSH quadratic-bucket guard is
     ON by default (`max_bucket=1000`: one degenerate band key otherwise makes
     the candidate self-join O(n^2)); pass None for the exact variant the
     oracle-gated dedup queries use. When the cap engages, the dropped-bucket
-    count is logged at WARNING (one tiny aggregate job over the distinct
-    surfaces' band stack) so the approximation is observable at runtime.
+    counts are logged at WARNING so the approximation is observable at
+    runtime.
+
+    Up to DRIVER_BOUND distinct surfaces (and capped candidate pairs) are
+    canonicalized on the driver, above it in Spark; see the module
+    docstring.
     """
-    # pin the distinct-surface table: the band stack, the singleton join,
-    # and the final mention mapping all read it — unpinned, each action
-    # (bucket audit, CC edge materialization, the entity-map count) re-runs
-    # the full-mention dropDuplicates shuffle
+    # pin the distinct-surface table: the size probe and, above the bound,
+    # the band stack and the singleton join all read it — unpinned, each
+    # action re-runs the full-mention dropDuplicates shuffle
     surfaces = (
         mentions.select(
             normalize_surface(F.col("surface")).alias("surface_norm")
@@ -285,40 +424,23 @@ def canonicalize_mentions(
         .dropDuplicates(["surface_norm"])
         .localCheckpoint(eager=False)
     )
-    # ONE pinned band stack shared between the audit aggregate and the
-    # candidate self-join
-    base = _surface_shingles(surfaces, "surface_norm", shingle_k)
-    stacked = band_stack(base, "node", 16, 4)
-    if max_bucket is not None:
-        # .first(), not DataFrame.observe: an observation fails when AQE
-        # prunes the observed branch on tiny input
-        dropped = (
-            dropped_buckets(stacked, max_bucket)
-            .agg(
-                F.count(F.lit(1)).alias("n_buckets"),
-                F.coalesce(F.sum("bucket_size"), F.lit(0)).alias("n_rows"),
-            )
-            .first()
+    # one bounded collect: both the size probe and the driver path's input
+    probe = surfaces.limit(DRIVER_BOUND + 1).collect()
+    comps_full = None
+    if len(probe) <= DRIVER_BOUND:
+        comps_full = _driver_surface_components(
+            mentions.sparkSession,
+            [r["surface_norm"] for r in probe],
+            shingle_k,
+            jaccard_threshold,
+            max_bucket,
         )
-        if dropped["n_buckets"]:
-            logger.warning(
-                "canonicalize_mentions: max_bucket=%d dropped %d band "
-                "bucket(s) covering %d surface-band rows — entity-id "
-                "assignment is approximate for those surfaces",
-                max_bucket, dropped["n_buckets"], dropped["n_rows"],
-            )
-    edges = _verified_edges(base, stacked, jaccard_threshold, max_bucket)
-    comps = connected_components(edges)
-    # singletons (no edges) keep themselves as component; a component's
-    # label is its min surface, i.e. the canonical one. A surface that
-    # normalizes to "" gets no id (triples keep its raw surface)
-    comps_full = (
-        surfaces.join(comps, surfaces.surface_norm == comps.node, "left")
-        .select(
-            "surface_norm",
-            F.coalesce(F.col("component"), F.col("surface_norm")).alias("component"),
+    if comps_full is None:
+        comps_full = _spark_surface_components(
+            surfaces, shingle_k, jaccard_threshold, max_bucket
         )
-    )
+    # a component's label is its min surface, i.e. the canonical one. A
+    # surface that normalizes to "" gets no id (triples keep its raw surface)
     surface_entity = comps_full.select(
         "surface_norm",
         F.when(

@@ -79,8 +79,11 @@ def run_kg_pipeline(
         # size-bucket so UDF partitions are even
         if cfg.salt_partitions:
             docs = salted_repartition(docs, "doc_id", num_partitions=cfg.salt_partitions)
-        docs = size_bucketed(docs, F.length("text"))
-        return docs
+        # with a salt, pass its partition count on: size_bucketed would
+        # otherwise probe the post-shuffle frame's partitions with a job
+        return size_bucketed(
+            docs, F.length("text"), num_partitions=cfg.salt_partitions
+        )
 
     def once(df: DataFrame) -> DataFrame:
         # without a ckpt_dir nothing materializes stages, and downstream

@@ -10,12 +10,14 @@ by its name:
     snapshot to ``stages/<stage>/run_id=<id>/`` and one lineage row per
     output partition to ``lineage/run_id=<id>/``:
       (stage, partition_id, input_sha256_digest, row_count, triple_count,
-       wall_time_s, ts)
+       stage_wall_time_s, ts)
     where triple_count is the row count on the ``triples`` stage and null
-    on every other stage, and the digest is an order-independent XOR fold
-    of per-row sha256 values (60-bit prefixes of the content_sha256 column,
-    or of sha2(row, 256) when absent) — a true digest of the sha256 hashes,
-    cheap at 100 TB (no sort, no collect). The stage's marker is written
+    on every other stage, stage_wall_time_s is the wall time of the whole
+    stage build (the same on every row of the run), and the digest is an
+    order-independent XOR fold of per-row sha256 values (60-bit prefixes
+    of the content_sha256 column, or of sha2(row, 256) when absent) — a
+    true digest of the sha256 hashes, cheap at 100 TB (no sort, no
+    collect). The stage's marker is written
     last, as the commit point: a crash before it leaves an orphan run that
     neither resume nor ``read_lineage`` sees, and the stage rebuilds.
 
@@ -45,7 +47,7 @@ from .incremental import (
 
 
 def partition_lineage(
-    df: DataFrame, stage: str, wall_time_s: float, digest_col: str | None = "content_sha256"
+    df: DataFrame, stage: str, stage_wall_time_s: float, digest_col: str | None = "content_sha256"
 ) -> DataFrame:
     """One row per Spark partition of `df` with an order-independent digest
     of the partition's sha256 values (XOR of 60-bit sha256 prefixes — the
@@ -79,7 +81,7 @@ def partition_lineage(
             (F.col("row_count") if stage == "triples" else F.lit(None))
             .cast("long")
             .alias("triple_count"),
-            F.lit(float(wall_time_s)).alias("wall_time_s"),
+            F.lit(float(stage_wall_time_s)).alias("stage_wall_time_s"),
             F.lit(ts).alias("ts"),
         )
     )

@@ -6,6 +6,9 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+import pytorch_ie_spark.operators.canonicalize as canon
+from pytorch_ie_spark.corpus import fixture_documents
+from pytorch_ie_spark.functions.hashing import char_shingles, minhash_signature
 from pytorch_ie_spark.operators.canonicalize import (
     _driver_side_components,
     canonicalize_mentions,
@@ -114,16 +117,17 @@ def test_driver_side_components_is_a_local_relation(spark):
 
 
 def test_canonicalize_job_bound(spark, sf_dir):
-    """canonicalize_mentions plus a count of its map runs at most 13 Spark
-    jobs on the sf0.001 mentions: the component map is a LocalRelation
-    (no Python-RDD jobs), one bounded collect is both the CC size probe and
-    the edge list, and no aggregate recomputes the canonical surface."""
+    """canonicalize_mentions plus a count of its map runs at most 5 Spark
+    jobs on the sf0.001 mentions: one bounded collect of the distinct
+    surfaces, after which the band stack, the bucket audit, the Jaccard
+    check and the union-find run on the driver, and the component map joins
+    back as a LocalRelation."""
     docs = documents_from_source_files(source_files_from_documents(spark, sf_dir))
     mentions = detect_mentions(docs, model_name="gazetteer_ner").localCheckpoint()
     with _job_group(spark) as jobs:
         n = canonicalize_mentions(mentions)[0].count()
     assert n == mentions.count()
-    assert len(jobs) <= 13, jobs
+    assert len(jobs) <= 5, jobs
 
 
 def test_non_latin_surfaces_keep_their_own_ids(spark):
@@ -241,28 +245,146 @@ def test_cc_distributed_dispatch_equals_driver_path(spark, sf_dir):
     assert driver == distributed and len(driver) > 0
 
 
-def test_canonicalize_logs_dropped_buckets(spark, caplog):
-    """When the quadratic-bucket cap engages, canonicalize_mentions must
-    WARN with the dropped-bucket counts (the observability contract for
-    the approximation)."""
-    import logging
-
-    from pyspark.sql import functions as F
-
-    from pytorch_ie_spark.operators.canonicalize import canonicalize_mentions
-
-    # hundreds of near-identical surfaces -> one degenerate band bucket
-    # 300 DISTINCT surfaces dominated by one shared boilerplate prefix:
-    # their minhash bands collide into a degenerate bucket > max_bucket
-    mentions = spark.range(300).select(
+def _boilerplate_mentions(spark):
+    """300 DISTINCT surfaces dominated by one shared boilerplate prefix:
+    their minhash bands collide into degenerate buckets."""
+    return spark.range(300).select(
         F.concat(F.lit("m"), F.col("id")).alias("mention_id"),
         F.concat(
             F.lit("the same exact shared boilerplate surface text number "),
             F.col("id").cast("string"),
         ).alias("surface"),
     )
-    with caplog.at_level(logging.WARNING,
-                         logger="pytorch_ie_spark.operators.canonicalize"):
-        mapped, _ = canonicalize_mentions(mentions, max_bucket=10)
-        mapped.count()
-    assert any("dropped" in r.message for r in caplog.records)
+
+
+def test_canonicalize_logs_dropped_buckets(spark, caplog, monkeypatch):
+    """When the quadratic-bucket cap engages, canonicalize_mentions must
+    WARN with the dropped-bucket counts (the observability contract for
+    the approximation) — the same message on the driver path and, with
+    DRIVER_BOUND at 0, on the Spark path."""
+    import logging
+
+    mentions = _boilerplate_mentions(spark)
+    messages = []
+    for bound in (canon.DRIVER_BOUND, 0):
+        monkeypatch.setattr(canon, "DRIVER_BOUND", bound)
+        caplog.clear()
+        with caplog.at_level(logging.WARNING,
+                             logger="pytorch_ie_spark.operators.canonicalize"):
+            mapped, _ = canonicalize_mentions(mentions, max_bucket=10)
+            mapped.count()
+        messages.append([r.getMessage() for r in caplog.records])
+    assert any("dropped" in m for m in messages[0])
+    assert messages[0] == messages[1]
+
+
+def _surface_rows(spark, surfaces, prefix):
+    return spark.createDataFrame(
+        [(f"{prefix}{i}", s) for i, s in enumerate(surfaces)],
+        "mention_id string, surface string",
+    )
+
+
+def _random_surfaces(seed: int = 5) -> list:
+    """Families of near-duplicate surfaces: random base names and their
+    typo, suffix, case and punctuation variants."""
+    rng = random.Random(seed)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    out = []
+    for _ in range(40):
+        base = "".join(rng.choice(letters) for _ in range(rng.randint(2, 12)))
+        out.append(base)
+        for _ in range(rng.randint(0, 4)):
+            i = rng.randrange(len(base))
+            out.append(rng.choice([
+                base[:i] + rng.choice(letters) + base[i + 1:],
+                base[:i] + base[i + 1:],
+                base + rng.choice([" inc", " corp", " ltd", "s"]),
+                base.upper() + ".",
+                " ".join([base, base[: rng.randint(1, len(base))]]),
+            ]))
+    return out
+
+
+def _corpus(spark, sf_dir, name):
+    if name == "fixture":
+        docs = fixture_documents(spark, split=None)
+        return detect_mentions(docs, model_name="rule_ner").select("mention_id", "surface")
+    if name == "sf0.001":
+        docs = documents_from_source_files(source_files_from_documents(spark, sf_dir))
+        return detect_mentions(docs, model_name="gazetteer_ner").select("mention_id", "surface")
+    if name == "boilerplate":
+        return _boilerplate_mentions(spark)
+    return _surface_rows(spark, _random_surfaces(), "r")
+
+
+@pytest.mark.parametrize("corpus", ["fixture", "sf0.001", "boilerplate", "random"])
+def test_driver_path_equals_spark_path(spark, sf_dir, monkeypatch, corpus):
+    """The driver path and the Spark path (DRIVER_BOUND at 0) give the same
+    (mention_id, entity_id) map and components, with the bucket cap off,
+    at its default, and small enough to drop buckets; "", null and a
+    surface that normalizes to "" included."""
+    mentions = _corpus(spark, sf_dir, corpus).unionByName(
+        _surface_rows(spark, ["", None, "北京", "!!"], "x")
+    ).localCheckpoint()
+    merged = {}
+    for max_bucket in (None, 1000, 2):
+        got = []
+        for bound in (canon.DRIVER_BOUND, 0):
+            monkeypatch.setattr(canon, "DRIVER_BOUND", bound)
+            mapping, comps = canonicalize_mentions(
+                mentions, jaccard_threshold=0.5, max_bucket=max_bucket
+            )
+            got.append((
+                sorted(map(tuple, mapping.collect()), key=str),
+                sorted(map(tuple, comps.collect()), key=str),
+            ))
+        assert got[0] == got[1], (corpus, max_bucket)
+        comps = got[0][1]
+        assert (None, None) in comps and ("", "") in comps
+        merged[max_bucket] = len({c for _, c in comps}) < len(comps)
+    # on the synthetic corpora the paths agree on real edges
+    assert corpus in ("fixture", "sf0.001") or merged[None]
+
+
+def test_driver_minhash_matches_reference():
+    """The driver's vectorized MinHash equals hashing.minhash_signature,
+    surface by surface, on shingle sets of one to many shingles."""
+    surfaces = ["a", "ab", "abc", "abcd"] + _random_surfaces(9)
+    sets = [frozenset(char_shingles(s, 3)) for s in surfaces]
+    got = canon._minhash_rows(sets, 16).tolist()
+    assert got == [minhash_signature(sorted(s), 16) for s in sets]
+
+
+def test_candidate_pairs_over_bound_fall_back_to_spark(spark, monkeypatch):
+    """300 surfaces fit under a bound of 300, but their uncapped candidate
+    pairs do not: the driver path declines before building a pair, and the
+    Spark path runs."""
+    calls = []
+    driver, spark_path = canon._driver_surface_components, canon._spark_surface_components
+
+    def spy(name, fn):
+        def call(*a, **k):
+            out = fn(*a, **k)
+            calls.append((name, out is None))
+            return out
+        return call
+
+    monkeypatch.setattr(canon, "DRIVER_BOUND", 300)
+    monkeypatch.setattr(canon, "_driver_surface_components", spy("driver", driver))
+    monkeypatch.setattr(canon, "_spark_surface_components", spy("spark", spark_path))
+    mapping, _ = canonicalize_mentions(_boilerplate_mentions(spark), max_bucket=None)
+    assert mapping.count() == 300
+    assert calls == [("driver", True), ("spark", False)]
+
+
+@pytest.mark.parametrize("order", [1, -1])
+def test_alias_collisions_link_the_minimum_id(spark, order):
+    """Aliases that normalize to the same key link the minimum entity id,
+    whatever the dictionary's row order or partitioning."""
+    m = _mentions(spark, ["IBM"])
+    rows = [("IBM", "Q1"), ("ibm", "Q2")][::order]
+    aliases = spark.createDataFrame(rows, "alias string, entity_id string")
+    for dictionary in (aliases.coalesce(1), aliases.repartition(2)):
+        linked = link_entities(m, dictionary).collect()
+        assert [r["linked_entity_id"] for r in linked] == ["Q1"]

@@ -304,3 +304,31 @@ def test_duplicate_source_file(spark, tmp_path):
     docs = read_committed_rows(spark, ckpt, "stages/documents")
     pairs = extract_relations_batched(docs, repeated, keep_none=True).collect()
     assert pairs and all(r["head_mention_id"] != r["tail_mention_id"] for r in pairs)
+
+
+def test_salted_documents_skip_the_partition_probe(spark, sf_dir, monkeypatch):
+    """With salt_partitions set, the documents stage is salted straight into
+    that many partitions: no `.rdd` probe runs the salted shuffle as a job
+    of its own while the plan is built, so the salted run costs at most one
+    job (its shuffle) more than the unsalted one."""
+    from pytorch_ie_spark import pipeline
+    from pytorch_ie_spark.sources.readers import source_files_from_documents
+    from tests.test_incremental import _job_group
+
+    documents = []
+    detect = pipeline.detect_mentions
+
+    def keep_documents(docs, **kw):
+        documents.append(docs)
+        return detect(docs, **kw)
+
+    monkeypatch.setattr(pipeline, "detect_mentions", keep_documents)
+    src = source_files_from_documents(spark, sf_dir)
+    jobs = {}
+    for salt in (None, 8):
+        cfg = KgPipelineConfig(canonicalize=False, salt_partitions=salt)
+        with _job_group(spark) as ran:
+            run_kg_pipeline(spark, src, cfg).count()
+        jobs[salt] = len(ran)
+    assert jobs[8] <= jobs[None] + 1, jobs
+    assert documents[-1].rdd.getNumPartitions() == 8

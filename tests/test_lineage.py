@@ -57,7 +57,7 @@ def test_lineage_rows_shape(spark, tmp_path):
     triples = [r for r in rows if r["stage"] == "triples"]
     assert sum(r["row_count"] for r in triples) == 30
     assert all(r["triple_count"] == r["row_count"] for r in triples)
-    assert all(r["wall_time_s"] >= 0 for r in rows)
+    assert all(r["stage_wall_time_s"] >= 0 for r in rows)
     assert all(r["input_sha256_digest"] for r in rows)
     assert set(lin.columns) == {
         "stage",
@@ -65,7 +65,7 @@ def test_lineage_rows_shape(spark, tmp_path):
         "input_sha256_digest",
         "row_count",
         "triple_count",
-        "wall_time_s",
+        "stage_wall_time_s",
         "ts",
     }
 
