@@ -14,20 +14,20 @@ the merge+dedup in utils/document.py:76-144):
   6. entity_id = 'sf:' + the component label, i.e. the lexicographic min
      normalized form per component (null for an empty normalized form).
 
-Hybrid execution, one bound (`DRIVER_BOUND`): the distinct-surface table
-of a corpus is small next to its mentions, so `canonicalize_mentions`
-fetches it with one bounded `limit(DRIVER_BOUND + 1).collect()`. At or
-under the bound, steps 3-5 run on the driver (`_driver_surface_components`:
-the band stack, the bucket cap and its audit, pair generation, the Jaccard
-check and the union-find), provided the capped candidate pairs
-(sum of C(n, 2) over the kept buckets, known before any pair is built)
-also fit under the bound; the result returns as one Arrow-built
-LocalRelation. Otherwise steps 3-5 run in Spark on the same pinned
-surfaces (`_spark_surface_components`): the MinHash-LSH core of
+Hybrid execution: the distinct-surface table of a corpus is small next to
+its mentions, so `canonicalize_mentions` fetches it with one bounded
+`limit(DRIVER_SURFACES + 1).collect()`. At or under that bound, steps 3-5
+run on the driver (`_driver_surface_components`: the band stack from
+`hashing.minhash_signature`, the bucket cap and its audit, pair
+generation, the Jaccard check and the union-find), provided the capped
+candidate pairs (sum of C(n, 2) over the kept buckets, known before any
+pair is built) fit under `DRIVER_PAIRS`; the result returns as one
+Arrow-built LocalRelation. Otherwise steps 3-5 run in Spark on the same
+pinned surfaces (`_spark_surface_components`): the MinHash-LSH core of
 operators/dedup.py (band stack, bucket cap, band self-join, Jaccard
 check), then `connected_components`, itself a driver union-find below
-`DRIVER_BOUND` edges and large-star/small-star rounds above it. Both paths
-give the same components (asserted in tests/test_canonicalize.py).
+100k edges and large-star/small-star rounds above it. Both paths give the
+same components (asserted in tests/test_canonicalize.py).
 
 Scale notes: bucket sizes are capped (`max_bucket`) so a degenerate band
 (stopword-ish surface) cannot produce a quadratic pair explosion — dropped
@@ -40,12 +40,16 @@ import logging
 from collections import defaultdict
 from itertools import combinations
 
-import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import MINHASH_AB, MINHASH_PRIME, char_shingles, md5_hex
+from ..functions.hashing import (
+    char_shingles,
+    jaccard,
+    lsh_band_keys,
+    minhash_signature,
+)
 from .dedup import (
     band_stack,
     bucket_pairs,
@@ -57,13 +61,15 @@ from .dedup import (
 
 logger = logging.getLogger(__name__)
 
-#: the most distinct surfaces, and the most capped candidate pairs, that
-#: `canonicalize_mentions` canonicalizes on the driver; also the edge bound
-#: of `connected_components`' driver union-find
-DRIVER_BOUND = 100_000
-
-# the surface MinHash: 16 components in 4 bands of 4
-_NUM_HASHES, _BAND_SIZE = 16, 4
+#: the most distinct surfaces canonicalized on the driver. Its MinHash is
+#: serial Python, ~0.11 ms a surface; on a 4-core VM the driver path beat
+#: the Spark path at 15k surfaces, tied at 20k and lost at 30k
+#: (scripts/bench_canonicalize_bound.py)
+DRIVER_SURFACES = 15_000
+#: the most capped candidate pairs the driver path checks: a pair costs a
+#: few microseconds there, so this bound only keeps a degenerate bucket
+#: (with `max_bucket=None`) off the driver
+DRIVER_PAIRS = 100_000
 
 
 def normalize_surface(col):
@@ -155,25 +161,6 @@ def _warn_dropped(max_bucket: int, n_buckets: int, n_rows: int) -> None:
         )
 
 
-def _minhash_rows(shingle_sets: list[frozenset], num_hashes: int) -> np.ndarray:
-    """(n, num_hashes) int64: `hashing.minhash_signature` of each non-empty
-    set. One md5 per distinct shingle; per component one vectorized affine
-    map over every shingle and a per-set min (a * base < 2^62: no
-    overflow)."""
-    base = {sh: int(md5_hex(sh)[:8], 16) for sh in frozenset().union(*shingle_sets)}
-    flat = np.fromiter(
-        (base[sh] for s in shingle_sets for sh in s), dtype=np.int64
-    )
-    starts = np.cumsum([0] + [len(s) for s in shingle_sets[:-1]])
-    return np.stack(
-        [
-            np.minimum.reduceat((a * flat + b) % MINHASH_PRIME, starts)
-            for a, b in MINHASH_AB[:num_hashes]
-        ],
-        axis=1,
-    )
-
-
 def _driver_surface_components(
     spark,
     surfaces: list,
@@ -187,31 +174,29 @@ def _driver_surface_components(
     logged, src < dst pairs of the kept buckets, the unrounded Jaccard
     check, and the union-find. Returns the (surface_norm, component) map
     ("" and null keep themselves), or None when the capped candidate pairs
-    exceed DRIVER_BOUND."""
+    exceed DRIVER_PAIRS."""
     # sorted, so a pair of member indices i < j is the pair src < dst
     nodes = sorted(s for s in surfaces if s)
     # char_shingles_col's sets: normalized surfaces are already lowercase
-    sets = [frozenset(char_shingles(s, shingle_k)) for s in nodes]
+    shingles = [char_shingles(s, shingle_k) for s in nodes]
     buckets = defaultdict(list)
-    if nodes:
-        sig = _minhash_rows(sets, _NUM_HASHES).tolist()
-        for i, row in enumerate(sig):
-            for lo in range(0, _NUM_HASHES, _BAND_SIZE):
-                buckets[(lo, *row[lo : lo + _BAND_SIZE])].append(i)
+    for i, sh in enumerate(shingles):
+        for key in lsh_band_keys(minhash_signature(sh, 16), 4):
+            buckets[key].append(i)
     kept = [
         m for m in buckets.values() if max_bucket is None or len(m) <= max_bucket
     ]
-    if sum(len(m) * (len(m) - 1) // 2 for m in kept) > DRIVER_BOUND:
+    if sum(len(m) * (len(m) - 1) // 2 for m in kept) > DRIVER_PAIRS:
         return None
     if max_bucket is not None:
         over = [len(m) for m in buckets.values() if len(m) > max_bucket]
         _warn_dropped(max_bucket, len(over), sum(over))
-    candidates = {pair for m in kept for pair in combinations(m, 2)}
-    edges = []
-    for i, j in candidates:
-        inter = len(sets[i] & sets[j])
-        if inter / (len(sets[i]) + len(sets[j]) - inter) >= jaccard_threshold:
-            edges.append((nodes[i], nodes[j]))
+    sets = [set(sh) for sh in shingles]
+    edges = [
+        (nodes[i], nodes[j])
+        for i, j in {pair for m in kept for pair in combinations(m, 2)}
+        if jaccard(sets[i], sets[j]) >= jaccard_threshold
+    ]
     return _driver_side_components(spark, edges, surfaces).toDF(
         "surface_norm", "component"
     )
@@ -328,7 +313,7 @@ def connected_components_star(
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, driver_threshold: int = DRIVER_BOUND
+    edges: DataFrame, max_iter: int = 25, driver_threshold: int = 100_000
 ) -> DataFrame:
     """(src, dst) string edges -> (node, component = min node label).
 
@@ -366,7 +351,7 @@ def _spark_surface_components(
     # ONE pinned band stack shared between the audit aggregate and the
     # candidate self-join
     base = _surface_shingles(surfaces, "surface_norm", shingle_k)
-    stacked = band_stack(base, "node", _NUM_HASHES, _BAND_SIZE)
+    stacked = band_stack(base, "node", 16, 4)
     if max_bucket is not None:
         # .first(), not DataFrame.observe: an observation fails when AQE
         # prunes the observed branch on tiny input
@@ -410,9 +395,9 @@ def canonicalize_mentions(
     counts are logged at WARNING so the approximation is observable at
     runtime.
 
-    Up to DRIVER_BOUND distinct surfaces (and capped candidate pairs) are
-    canonicalized on the driver, above it in Spark; see the module
-    docstring.
+    Up to DRIVER_SURFACES distinct surfaces (and DRIVER_PAIRS capped
+    candidate pairs) are canonicalized on the driver, above either in
+    Spark; see the module docstring.
     """
     # pin the distinct-surface table: the size probe and, above the bound,
     # the band stack and the singleton join all read it — unpinned, each
@@ -425,9 +410,9 @@ def canonicalize_mentions(
         .localCheckpoint(eager=False)
     )
     # one bounded collect: both the size probe and the driver path's input
-    probe = surfaces.limit(DRIVER_BOUND + 1).collect()
+    probe = surfaces.limit(DRIVER_SURFACES + 1).collect()
     comps_full = None
-    if len(probe) <= DRIVER_BOUND:
+    if len(probe) <= DRIVER_SURFACES:
         comps_full = _driver_surface_components(
             mentions.sparkSession,
             [r["surface_norm"] for r in probe],

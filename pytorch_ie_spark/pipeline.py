@@ -21,7 +21,7 @@ from .operators.mentions import detect_mentions
 from .operators.relations import extract_relations_batched
 from .operators.triples import dedupe_triples, relations_to_triples
 from .plans.lineage import run_stage
-from .plans.skew import salted_repartition, size_bucketed
+from .plans.skew import size_bucketed
 from .sources.readers import documents_from_source_files
 
 
@@ -75,12 +75,10 @@ def run_kg_pipeline(
 
     def build_documents() -> DataFrame:
         docs = documents_from_source_files(source_files)
-        # mega-repo skew: spread by salted content hash; long-file skew:
-        # size-bucket so UDF partitions are even
-        if cfg.salt_partitions:
-            docs = salted_repartition(docs, "doc_id", num_partitions=cfg.salt_partitions)
-        # with a salt, pass its partition count on: size_bucketed would
-        # otherwise probe the post-shuffle frame's partitions with a job
+        # one shuffle on (size bucket, row-content hash): even UDF partitions
+        # for long-file skew, and the content hash spreads a mega-repo's
+        # documents too. A salt fixes the partition count, which also spares
+        # size_bucketed its partition probe
         return size_bucketed(
             docs, F.length("text"), num_partitions=cfg.salt_partitions
         )

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 import pytorch_ie_spark.operators.canonicalize as canon
 from pytorch_ie_spark.corpus import fixture_documents
-from pytorch_ie_spark.functions.hashing import char_shingles, minhash_signature
 from pytorch_ie_spark.operators.canonicalize import (
     _driver_side_components,
     canonicalize_mentions,
@@ -261,13 +260,13 @@ def test_canonicalize_logs_dropped_buckets(spark, caplog, monkeypatch):
     """When the quadratic-bucket cap engages, canonicalize_mentions must
     WARN with the dropped-bucket counts (the observability contract for
     the approximation) — the same message on the driver path and, with
-    DRIVER_BOUND at 0, on the Spark path."""
+    DRIVER_SURFACES at 0, on the Spark path."""
     import logging
 
     mentions = _boilerplate_mentions(spark)
     messages = []
-    for bound in (canon.DRIVER_BOUND, 0):
-        monkeypatch.setattr(canon, "DRIVER_BOUND", bound)
+    for bound in (canon.DRIVER_SURFACES, 0):
+        monkeypatch.setattr(canon, "DRIVER_SURFACES", bound)
         caplog.clear()
         with caplog.at_level(logging.WARNING,
                              logger="pytorch_ie_spark.operators.canonicalize"):
@@ -320,18 +319,21 @@ def _corpus(spark, sf_dir, name):
 
 @pytest.mark.parametrize("corpus", ["fixture", "sf0.001", "boilerplate", "random"])
 def test_driver_path_equals_spark_path(spark, sf_dir, monkeypatch, corpus):
-    """The driver path and the Spark path (DRIVER_BOUND at 0) give the same
-    (mention_id, entity_id) map and components, with the bucket cap off,
-    at its default, and small enough to drop buckets; "", null and a
-    surface that normalizes to "" included."""
+    """The driver path and the Spark path (DRIVER_SURFACES at 0) give the
+    same (mention_id, entity_id) map and components, with the bucket cap
+    off and small enough to drop buckets; "", null and a surface that
+    normalizes to "" included."""
     mentions = _corpus(spark, sf_dir, corpus).unionByName(
         _surface_rows(spark, ["", None, "北京", "!!"], "x")
     ).localCheckpoint()
+    # the uncapped boilerplate buckets hold ~120k candidate pairs: keep
+    # them on the driver side of the comparison
+    monkeypatch.setattr(canon, "DRIVER_PAIRS", 10**6)
     merged = {}
-    for max_bucket in (None, 1000, 2):
+    for max_bucket in (None, 2):
         got = []
-        for bound in (canon.DRIVER_BOUND, 0):
-            monkeypatch.setattr(canon, "DRIVER_BOUND", bound)
+        for bound in (canon.DRIVER_SURFACES, 0):
+            monkeypatch.setattr(canon, "DRIVER_SURFACES", bound)
             mapping, comps = canonicalize_mentions(
                 mentions, jaccard_threshold=0.5, max_bucket=max_bucket
             )
@@ -347,19 +349,10 @@ def test_driver_path_equals_spark_path(spark, sf_dir, monkeypatch, corpus):
     assert corpus in ("fixture", "sf0.001") or merged[None]
 
 
-def test_driver_minhash_matches_reference():
-    """The driver's vectorized MinHash equals hashing.minhash_signature,
-    surface by surface, on shingle sets of one to many shingles."""
-    surfaces = ["a", "ab", "abc", "abcd"] + _random_surfaces(9)
-    sets = [frozenset(char_shingles(s, 3)) for s in surfaces]
-    got = canon._minhash_rows(sets, 16).tolist()
-    assert got == [minhash_signature(sorted(s), 16) for s in sets]
-
-
 def test_candidate_pairs_over_bound_fall_back_to_spark(spark, monkeypatch):
-    """300 surfaces fit under a bound of 300, but their uncapped candidate
-    pairs do not: the driver path declines before building a pair, and the
-    Spark path runs."""
+    """300 surfaces fit under DRIVER_SURFACES, but their ~120k uncapped
+    candidate pairs exceed DRIVER_PAIRS: the driver path declines before
+    building a pair, and the Spark path runs."""
     calls = []
     driver, spark_path = canon._driver_surface_components, canon._spark_surface_components
 
@@ -370,7 +363,6 @@ def test_candidate_pairs_over_bound_fall_back_to_spark(spark, monkeypatch):
             return out
         return call
 
-    monkeypatch.setattr(canon, "DRIVER_BOUND", 300)
     monkeypatch.setattr(canon, "_driver_surface_components", spy("driver", driver))
     monkeypatch.setattr(canon, "_spark_surface_components", spy("spark", spark_path))
     mapping, _ = canonicalize_mentions(_boilerplate_mentions(spark), max_bucket=None)
