@@ -58,13 +58,6 @@ def char_shingles(text: str, k: int = 5) -> list[str]:
     return sorted({t[i : i + k] for i in range(len(t) - k + 1)})
 
 
-def token_ngrams(tokens: list[str], n: int = 3) -> list[str]:
-    """Distinct token n-grams joined with a space."""
-    if len(tokens) < n:
-        return [" ".join(tokens)] if tokens else []
-    return sorted({" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)})
-
-
 def minhash_signature(shingles: list[str], num_hashes: int = 16) -> list[int]:
     """Universal-hash minhash: mh_i = min over shingles of
     (a_i * int(md5(sh)[:8], 16) + b_i) mod MINHASH_PRIME. One md5 per shingle

@@ -26,11 +26,6 @@ def tokenize_with_offsets(text: str) -> list[tuple[str, int, int]]:
     return [(m.group(0), m.start(), m.end()) for m in TOKEN_RE.finditer(text)]
 
 
-def whitespace_tokenize_with_offsets(text: str) -> list[tuple[str, int, int]]:
-    """Split on whitespace runs; offsets into the original text."""
-    return [(m.group(0), m.start(), m.end()) for m in re.finditer(r"\S+", text)]
-
-
 def sentence_spans(text: str) -> list[tuple[int, int]]:
     """Sentence partition spans: '.'/'!'/'?'-terminated, end-exclusive,
     trailing space excluded — matches the fixture corpus sentence layout

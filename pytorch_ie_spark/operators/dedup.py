@@ -486,16 +486,6 @@ def simhash_near_dup_pairs(
     )
 
 
-def simhash_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Docs sharing an identical 16-bit simhash (cheap near-dup blocking)."""
-    s = simhash16(df, id_col, text_col)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def cross_corpus_near_dups(
     new_docs: DataFrame,
     index_docs: DataFrame,

@@ -118,8 +118,16 @@ def extract_relations_batched(
     batch in a single vectorized call.
 
     `max_window` bounds each candidate's classifier context to a window
-    of that many chars around its arguments (see classify_pairs)."""
-    m_agg = mentions.groupBy("doc_id").agg(
+    of that many chars around its arguments (see classify_pairs).
+
+    The mentions are hash-partitioned on `doc_id` into
+    `spark.sql.shuffle.partitions` parts first. The grouping reuses that
+    partitioning, so there is no extra exchange, and a partition count
+    the user asked for is one AQE never coalesces: left to AQE, the small
+    aggregated mention table lands on one task, and the classifier with
+    it."""
+    n = int(mentions.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    m_agg = mentions.repartition(n, "doc_id").groupBy("doc_id").agg(
         F.sort_array(
             F.collect_set(F.struct("start", "end", "label", "mention_id"))
         ).alias("ments")

@@ -48,12 +48,6 @@ def mock_span_scores(surface: str, n_classes: int) -> list[float]:
     ]
 
 
-def mock_span_score(surface: str, label_index: int) -> float:
-    """Single-class view of mock_span_scores (label identified by INDEX in
-    the classes tuple)."""
-    return mock_span_scores(surface, label_index + 1)[label_index]
-
-
 def enumerate_and_classify_spans(
     documents: DataFrame,
     max_span_length: int = 4,

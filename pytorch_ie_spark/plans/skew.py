@@ -76,15 +76,3 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def skew_report(df: DataFrame, key_col: str, top_n: int = 10) -> DataFrame:
-    """Diagnostic: heaviest keys with their share of total rows."""
-    total = df.count()
-    return (
-        df.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("share", F.round(F.col("rows") / F.lit(total), 6))
-        .orderBy(F.col("rows").desc())
-        .limit(top_n)
-    )

@@ -4,17 +4,25 @@ Local mode is the sandbox proxy for a multi-executor cluster; every config
 here is chosen to also be the right default on a 1000-executor cluster
 reading 100 TB (AQE on, adaptive coalescing, Arrow for all pandas UDF
 boundaries, sane shuffle partition count).
+
+The session's Python worker daemon is this module run as `__main__` (see
+the bottom of the file): it keeps a reused worker from re-reading
+PySpark's unchanged zip archives on every task.
 """
 
 from __future__ import annotations
 
 import os
+import zipimport
 
 from pyspark.sql import SparkSession
 
 # At cluster scale shuffle partitions should track total cores (2-3x);
 # locally we match the local[N] thread count to avoid tiny-partition overhead.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: the directory that holds the package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -25,6 +33,10 @@ def get_spark(
 ) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    # the worker daemon is this module, so the package must import on the
+    # workers whatever their working directory
+    extra_conf = dict(extra_conf or {})
+    worker_path = [ROOT] + extra_conf.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -37,11 +49,60 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", __spec__.name)
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(dict.fromkeys(filter(None, worker_path))))
         # deterministic float handling for correctness comparisons
         .config("spark.sql.legacy.allowNegativeScaleOfDecimal", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _archive_stat(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """Make `zipimporter.invalidate_caches()` re-read an archive only when
+    its (mtime, size) changed since this process last read it.
+
+    A Python worker calls `importlib.invalidate_caches()` before every
+    task (`pyspark.worker_util.setup_spark_files`), so that files added
+    with `addPyFile` become importable. On CPython 3.11 that re-parses the
+    central directory of every archive on `sys.path` for each of its
+    importers: pyspark.zip and the Spark jars, ~80 ms a task, though
+    they never change. Directory importers (`FileFinder`) are still
+    invalidated as before. An importer whose archive another importer
+    already re-read takes the shared directory cache, as a new importer
+    does."""
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "skips_unchanged", False):
+        return
+    read_at: dict[str, tuple[int, int] | None] = {}  # archive -> its stat when read
+
+    def invalidate_caches(self):
+        stat = _archive_stat(self.archive)
+        if stat is None or read_at.get(self.archive) != stat:
+            reread(self)
+            read_at[self.archive] = stat
+        else:
+            self._files = zipimport._zip_directory_cache.get(self.archive, {})
+
+    invalidate_caches.skips_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if __name__ == "__main__":
+    # `spark.python.daemon.module`: the stock daemon with the patch above
+    # installed before it forks any worker
+    skip_unchanged_zip_rereads()
+    from pyspark.daemon import manager
+
+    manager()

@@ -26,11 +26,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def source_files_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adapt the synthetic documents table to the input_hint shape
     (repo, path, commit, lang, content). `source` plays the repo role so the

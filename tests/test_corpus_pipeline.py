@@ -217,6 +217,40 @@ def test_batched_relation_plan_shape(spark, pipeline_outputs):
     assert "FlatMapGroupsInPandas" not in plan
 
 
+def test_relation_stage_keeps_its_fan_out(spark):
+    """On the pipeline's pinned stage inputs AQE would coalesce the small
+    aggregated mention table, and the classifier that runs on it, onto one
+    task. The relation stage hash-partitions the mentions on doc_id into
+    spark.sql.shuffle.partitions parts, which AQE never coalesces: the
+    executed plan keeps that exchange under the MapInPandas, and the
+    classifier's stage runs that many tasks."""
+    import re
+
+    from pytorch_ie_spark.operators.relations import extract_relations_batched
+    from pytorch_ie_spark.plans.skew import size_bucketed
+    from pytorch_ie_spark.sources.readers import documents_from_source_files
+    from tests.test_incremental import _job_group
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    docs = documents_from_source_files(fixture_source_files(spark))
+    docs = size_bucketed(docs, F.length("text")).localCheckpoint()
+    mentions = detect_mentions(docs, model_name="rule_ner").localCheckpoint()
+    relations = extract_relations_batched(docs, mentions, model_name="rule_re")
+    with _job_group(spark) as ran:
+        assert len(relations.collect()) == 13
+    plan = relations._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "MapInPandas" in final
+    under = final.split("MapInPandas", 1)[1]
+    assert re.search(
+        rf"Exchange hashpartitioning\(doc_id#\d+, {n}\), REPARTITION_BY_NUM", under
+    ), final
+    st = spark.sparkContext.statusTracker()
+    # the result stage, the classifier's, is the last stage submitted
+    classifier_stage = max(s for j in ran for s in st.getJobInfo(j).stageIds)
+    assert st.getStageInfo(classifier_stage).numTasks == n
+
+
 def test_pipeline_generative_linker(spark):
     """linker='generative' swaps the LSH canonicalizer for the GENRE-style
     trie decode: every triple's subj/obj is a 'gen:'-prefixed KB entity,

@@ -1,0 +1,57 @@
+"""The session's worker daemon: a reused Python worker re-reads a zip
+archive on `sys.path` only when the archive changed."""
+
+import os
+import zipfile
+import zipimport
+
+from pytorch_ie_spark import session
+
+
+def test_workers_skip_unchanged_zip_rereads(spark):
+    def report(batches):
+        import zipimport
+
+        import pandas as pd
+
+        patched = getattr(zipimport.zipimporter.invalidate_caches, "skips_unchanged", False)
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"patched": [patched]})
+
+    rows = spark.range(8).repartition(4).mapInPandas(report, "patched boolean").collect()
+    assert [r["patched"] for r in rows] == [True] * 4
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, source in modules.items():
+            zf.writestr(zipfile.ZipInfo(f"{name}.py", date_time=(2020, 1, 1, 0, 0, 0)), source)
+
+
+def test_invalidate_caches_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches)
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"aaa": "X = 1\n"})
+    importer, other = zipimport.zipimporter(archive), zipimport.zipimporter(archive)
+    session.skip_unchanged_zip_rereads()
+    importer.invalidate_caches()
+    assert importer.find_spec("aaa") is not None
+
+    # new content, same size and mtime: not re-read, so the importer keeps
+    # the directory it read before
+    stat = os.stat(archive)
+    _write_zip(archive, {"bbb": "X = 2\n"})
+    os.utime(archive, ns=(stat.st_atime_ns, stat.st_mtime_ns))
+    assert os.path.getsize(archive) == stat.st_size
+    importer.invalidate_caches()
+    assert importer.find_spec("bbb") is None and importer.find_spec("aaa") is not None
+
+    # new content and a new size: re-read, the new module imports
+    _write_zip(archive, {"aaa": "X = 1\n", "newmod": "X = 3\n"})
+    importer.invalidate_caches()
+    assert importer.find_spec("newmod") is not None
+    # an importer made before the change sees the directory the first
+    # importer re-read
+    other.invalidate_caches()
+    assert other.find_spec("newmod") is not None
