@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
+
 #: smallest prime > 2^32 (MLlib MinHashLSH uses the same modulus trick)
 MINHASH_PRIME = 4294967311
 
@@ -71,13 +73,33 @@ def minhash_signature(shingles: list[str], num_hashes: int = 16) -> list[int]:
     ]
 
 
-def lsh_band_keys(signature: list[int], band_size: int = 4) -> list[str]:
-    """Concatenate signature rows into band keys; equal band key => candidate.
-    Band b is prefixed with its index so bands never collide across rows."""
-    return [
-        "|".join([str(i // band_size)] + [str(v) for v in signature[i : i + band_size]])
-        for i in range(0, len(signature), band_size)
-    ]
+def minhash_matrix(shingle_lists: list[list[str]], num_hashes: int = 16) -> np.ndarray:
+    """Row r is `minhash_signature(shingle_lists[r], num_hashes)`, as an
+    int64 (rows, num_hashes) array; every list must be non-empty. One md5
+    per distinct shingle; component i is a `np.minimum.reduceat` of
+    (a_i * base + b_i) mod MINHASH_PRIME over each row's shingles. The
+    components are computed one at a time, so no temporary holds more than
+    one value per shingle occurrence."""
+    lengths = np.fromiter(map(len, shingle_lists), np.int64, len(shingle_lists))
+    if not lengths.all():
+        raise ValueError("minhash_matrix needs a non-empty shingle list per row")
+    index: dict[str, int] = {}
+    ids = np.fromiter(
+        (index.setdefault(sh, len(index)) for shs in shingle_lists for sh in shs),
+        np.int64,
+        int(lengths.sum()),
+    )
+    distinct = np.fromiter(
+        (int.from_bytes(hashlib.md5(sh.encode("utf-8")).digest()[:4], "big") for sh in index),
+        np.int64,
+        len(index),
+    )
+    base = distinct[ids]
+    starts = np.cumsum(lengths) - lengths
+    sig = np.empty((len(shingle_lists), num_hashes), np.int64)
+    for i, (a, b) in enumerate(MINHASH_AB[:num_hashes]):
+        sig[:, i] = np.minimum.reduceat((a * base + b) % MINHASH_PRIME, starts)
+    return sig
 
 
 def hex16_to_int(h4: str) -> int:

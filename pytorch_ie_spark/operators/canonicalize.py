@@ -18,7 +18,7 @@ Hybrid execution: the distinct-surface table of a corpus is small next to
 its mentions, so `canonicalize_mentions` fetches it with one bounded
 `limit(DRIVER_SURFACES + 1).collect()`. At or under that bound, steps 3-5
 run on the driver (`_driver_surface_components`: the band stack from
-`hashing.minhash_signature`, the bucket cap and its audit, pair
+`hashing.minhash_matrix`, the bucket cap and its audit, pair
 generation, the Jaccard check and the union-find), provided the capped
 candidate pairs (sum of C(n, 2) over the kept buckets, known before any
 pair is built) fit under `DRIVER_PAIRS`; the result returns as one
@@ -38,18 +38,13 @@ from __future__ import annotations
 
 import logging
 from collections import defaultdict
-from itertools import combinations
+from itertools import combinations, repeat
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import (
-    char_shingles,
-    jaccard,
-    lsh_band_keys,
-    minhash_signature,
-)
+from ..functions.hashing import char_shingles, jaccard, minhash_matrix
 from .dedup import (
     band_stack,
     bucket_pairs,
@@ -61,15 +56,17 @@ from .dedup import (
 
 logger = logging.getLogger(__name__)
 
-#: the most distinct surfaces canonicalized on the driver. Its MinHash is
-#: serial Python, ~0.11 ms a surface; on a 4-core VM the driver path beat
-#: the Spark path at 15k surfaces, tied at 20k and lost at 30k
-#: (scripts/bench_canonicalize_bound.py)
-DRIVER_SURFACES = 15_000
-#: the most capped candidate pairs the driver path checks: a pair costs a
-#: few microseconds there, so this bound only keeps a degenerate bucket
+#: the most distinct surfaces canonicalized on the driver: on a 4-core VM
+#: the driver path (NumPy MinHash) beat the Spark path at every size
+#: measured, 5.3-5.9 s against 14.4 s at 180k surfaces, the largest set
+#: run in two rounds (scripts/bench_canonicalize_bound.py,
+#: BENCH_canon_bound_r08.json)
+DRIVER_SURFACES = 180_000
+#: the most capped candidate pairs the driver path checks: it beat the
+#: Spark path ~7x on the largest pair-heavy set measured (1.34M pairs, a
+#: 1000-member boilerplate group); the bound keeps a degenerate bucket
 #: (with `max_bucket=None`) off the driver
-DRIVER_PAIRS = 100_000
+DRIVER_PAIRS = 1_350_000
 
 
 def normalize_surface(col):
@@ -161,6 +158,20 @@ def _warn_dropped(max_bucket: int, n_buckets: int, n_rows: int) -> None:
         )
 
 
+def _band_buckets(shingles: list[list[str]]) -> list[list[int]]:
+    """The band buckets of the band stack (4 bands of 4 MinHash components)
+    over non-empty shingle lists: the ascending row indices sharing each
+    band key. A key is (band, its 4 components), equal exactly when the
+    Spark path's "band|mh|mh|mh|mh" string keys are equal."""
+    sig = minhash_matrix(shingles, 16)
+    buckets = defaultdict(list)
+    for band in range(4):
+        columns = sig[:, 4 * band : 4 * band + 4].T.tolist()
+        for i, key in enumerate(zip(repeat(band), *columns)):
+            buckets[key].append(i)
+    return list(buckets.values())
+
+
 def _driver_surface_components(
     spark,
     surfaces: list,
@@ -179,17 +190,12 @@ def _driver_surface_components(
     nodes = sorted(s for s in surfaces if s)
     # char_shingles_col's sets: normalized surfaces are already lowercase
     shingles = [char_shingles(s, shingle_k) for s in nodes]
-    buckets = defaultdict(list)
-    for i, sh in enumerate(shingles):
-        for key in lsh_band_keys(minhash_signature(sh, 16), 4):
-            buckets[key].append(i)
-    kept = [
-        m for m in buckets.values() if max_bucket is None or len(m) <= max_bucket
-    ]
+    buckets = _band_buckets(shingles)
+    kept = [m for m in buckets if max_bucket is None or len(m) <= max_bucket]
     if sum(len(m) * (len(m) - 1) // 2 for m in kept) > DRIVER_PAIRS:
         return None
     if max_bucket is not None:
-        over = [len(m) for m in buckets.values() if len(m) > max_bucket]
+        over = [len(m) for m in buckets if len(m) > max_bucket]
         _warn_dropped(max_bucket, len(over), sum(over))
     sets = [set(sh) for sh in shingles]
     edges = [

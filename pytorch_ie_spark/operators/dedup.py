@@ -108,11 +108,11 @@ def band_stack(
     """(id, shingles) -> (id, band_key), one row per (row, band), pinned.
 
     Band b's key is "b|mh..|mh.." over components b*band_size onward, the
-    hashing.lsh_band_keys form (the band index prefix keeps bands from
-    colliding with each other); a trailing partial band is not keyed. The
-    stack is read by the bucket cap's window, its audit, and both sides of
-    the bucket join, so it is pinned once (a lazy local checkpoint: it
-    materializes on the first action that reads it)."""
+    form of the DuckDB oracle's band keys (the band index prefix keeps
+    bands from colliding with each other); a trailing partial band is not
+    keyed. The stack is read by the bucket cap's window, its audit, and
+    both sides of the bucket join, so it is pinned once (a lazy local
+    checkpoint: it materializes on the first action that reads it)."""
     sig = with_minhash_signature(
         base.select(id_col, "shingles"), "shingles", num_hashes
     )

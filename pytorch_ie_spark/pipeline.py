@@ -75,10 +75,11 @@ def run_kg_pipeline(
 
     def build_documents() -> DataFrame:
         docs = documents_from_source_files(source_files)
-        # one shuffle on (size bucket, row-content hash): even UDF partitions
-        # for long-file skew, and the content hash spreads a mega-repo's
-        # documents too. A salt fixes the partition count, which also spares
-        # size_bucketed its partition probe
+        # one shuffle on the row-content hash, sorted by size bucket within
+        # each partition: even UDF partitions with length-homogeneous
+        # batches, and the content hash spreads a mega-repo's documents too.
+        # A salt fixes the partition count, which also spares size_bucketed
+        # its partition probe
         return size_bucketed(
             docs, F.length("text"), num_partitions=cfg.salt_partitions
         )

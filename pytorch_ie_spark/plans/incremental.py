@@ -103,10 +103,11 @@ def _write_run(
 
 
 def _commit_units(unit_keys: DataFrame, out_dir: str, run_id: str) -> None:
-    """Phase 2, the commit point: one (unit_key, run_id) marker per unit."""
+    """Phase 2, the commit point: a (unit_key, run_id) marker per row of
+    `unit_keys`. A unit that appears twice gets two identical markers;
+    every marker reader tolerates that, so no shuffle removes them."""
     (
         unit_keys.select("unit_key")
-        .dropDuplicates(["unit_key"])
         .withColumn("run_id", F.lit(run_id))
         .write.mode("append")
         .parquet(_processed_path(out_dir))
@@ -192,17 +193,17 @@ def ingest_increment(
 
     pending = pending_source_files(spark, source_files, out_dir).persist()
     try:
-        n_units = pending.count()
-        if n_units == 0:
+        if pending.isEmpty():
             return {"processed_units": 0, "new_triples": 0}
         run_id = _new_run_id()
-        written = Observation()
+        written, committed = Observation(), Observation()
         rows = build_rows(pending).observe(written, F.count(F.lit(1)).alias("n"))
         _write_run(rows, out_dir, data_name, run_id, [data_partition_col])
+        units = pending.select(_unit_key_col().alias("unit_key"))
         _commit_units(
-            pending.select(_unit_key_col().alias("unit_key")), out_dir, run_id
+            units.observe(committed, F.count(F.lit(1)).alias("n")), out_dir, run_id
         )
-        return {"processed_units": n_units, "new_triples": written.get["n"]}
+        return {"processed_units": committed.get["n"], "new_triples": written.get["n"]}
     finally:
         pending.unpersist()
 

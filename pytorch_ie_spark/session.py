@@ -7,12 +7,14 @@ boundaries, sane shuffle partition count).
 
 The session's Python worker daemon is this module run as `__main__` (see
 the bottom of the file): it keeps a reused worker from re-reading
-PySpark's unchanged zip archives on every task.
+PySpark's unchanged zip archives on every task, and from delaying the
+ACKs of a task's first input.
 """
 
 from __future__ import annotations
 
 import os
+import socket
 import zipimport
 
 from pyspark.sql import SparkSession
@@ -99,10 +101,37 @@ def skip_unchanged_zip_rereads() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
+def ack_task_input_at_once() -> None:
+    """Make each task of a worker first set TCP_QUICKACK on its socket.
+
+    A reused worker otherwise delays the ACK of the task's first segments
+    (by ~40 ms on Linux), and the JVM, which waits for that ACK before it
+    sends the rest (Nagle), stalls the task's first input batch for as
+    long. The kernel leaves quick-ACK mode again on its own, so the flag
+    is set anew per task: the daemon's per-task entry point,
+    `pyspark.daemon.worker`, is wrapped. A Unix domain socket has no ACKs
+    and is left alone, and so is a platform without the option."""
+    import pyspark.daemon
+
+    task = pyspark.daemon.worker
+    quickack = getattr(socket, "TCP_QUICKACK", None)
+    if quickack is None or getattr(task, "acks_at_once", False):
+        return
+
+    def worker(sock, authenticated):
+        if sock.family != socket.AF_UNIX:
+            sock.setsockopt(socket.IPPROTO_TCP, quickack, 1)
+        return task(sock, authenticated)
+
+    worker.acks_at_once = True
+    pyspark.daemon.worker = worker
+
+
 if __name__ == "__main__":
-    # `spark.python.daemon.module`: the stock daemon with the patch above
+    # `spark.python.daemon.module`: the stock daemon with the patches above
     # installed before it forks any worker
     skip_unchanged_zip_rereads()
+    ack_task_input_at_once()
     from pyspark.daemon import manager
 
     manager()

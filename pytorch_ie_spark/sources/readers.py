@@ -13,17 +13,40 @@ declarative scan.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
+#: path -> (st_mtime_ns, st_size, schema) of the local parquet files read
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Scan `<sf_dir>/<name>.parquet`. Spark infers a parquet schema with
+    a Spark job while the plan is built; a local regular file that is
+    unchanged since an earlier read (same mtime and size) is read with the
+    schema inferred then, and so runs no job until an action. Directories
+    and URIs are read as is."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    cached = _SCHEMAS.get(path)
+    if cached is not None and cached[:2] == (st.st_mtime_ns, st.st_size):
+        return spark.read.schema(cached[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (st.st_mtime_ns, st.st_size, df.schema)
+    return df
 
 
 def source_files_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

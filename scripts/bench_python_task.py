@@ -7,7 +7,8 @@ Each mode runs in a fresh process and Spark session on local[nproc]:
   daemon, whose reused workers re-read every zip archive on `sys.path`
   before each task;
 - `session`: what `session.get_spark` sets, the package entry point that
-  skips re-reading an unchanged archive.
+  skips re-reading an unchanged archive and sets TCP_QUICKACK on each
+  task's socket.
 
 A mode reports, on warm reused workers:
 
@@ -27,7 +28,7 @@ The worker timers are installed by the UDF itself in each worker process
 (wrapping the daemon's task entry point, `importlib.invalidate_caches` and
 `pyspark.worker.read_udfs`), so both modes are measured the same way.
 
-Usage: python scripts/bench_python_task.py [--rounds 3] [--reps 5] [--out BENCH_pytask_r07.json]
+Usage: python scripts/bench_python_task.py [--rounds 3] [--reps 5] [--out BENCH_pytask_r08.json]
 """
 
 from __future__ import annotations

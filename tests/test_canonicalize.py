@@ -351,8 +351,9 @@ def test_driver_path_equals_spark_path(spark, sf_dir, monkeypatch, corpus):
 
 def test_candidate_pairs_over_bound_fall_back_to_spark(spark, monkeypatch):
     """300 surfaces fit under DRIVER_SURFACES, but their ~120k uncapped
-    candidate pairs exceed DRIVER_PAIRS: the driver path declines before
-    building a pair, and the Spark path runs."""
+    candidate pairs exceed a DRIVER_PAIRS of 100k: the driver path declines
+    before building a pair, and the Spark path runs."""
+    monkeypatch.setattr(canon, "DRIVER_PAIRS", 100_000)
     calls = []
     driver, spark_path = canon._driver_surface_components, canon._spark_surface_components
 

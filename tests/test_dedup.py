@@ -7,6 +7,7 @@ from pytorch_ie_spark.functions.hashing import (
     char_shingles,
     jaccard,
     md5_hex,
+    minhash_matrix,
     minhash_signature,
     simhash16,
 )
@@ -64,6 +65,29 @@ def test_minhash_signature_matches_python(spark):
         assert got == {
             i: minhash_signature(char_shingles(t, 5), n) for i, t in enumerate(texts)
         }
+
+
+def test_minhash_matrix_equals_minhash_signature():
+    """The NumPy signature matrix is bit-identical to the loop reference,
+    row by row, on random, 1-2-char, non-ASCII and repeated-character
+    surfaces; a shingle repeated across rows is hashed once but read by
+    every row."""
+    import random
+
+    rng = random.Random(7)
+    surfaces = [
+        "".join(rng.choice("abcdefghij klmnop") for _ in range(rng.randint(3, 40)))
+        for _ in range(200)
+    ]
+    surfaces += ["a", "z", "ab", "q9", "北京", "東京", "ß", "café münchen", "naïve ö"]
+    surfaces += ["aaaaaaaa", "a" * 3, "abababababab", "zzz zzz zzz", "aaaaaaaa"]
+    for k in (1, 3, 5):
+        shingles = [char_shingles(s, k) for s in surfaces]
+        sig = minhash_matrix(shingles, 16)
+        assert sig.shape == (len(surfaces), 16)
+        assert sig.tolist() == [minhash_signature(sh, 16) for sh in shingles]
+    assert minhash_matrix([["abc"]], 4).tolist() == [minhash_signature(["abc"], 4)]
+    assert minhash_matrix([], 16).shape == (0, 16)
 
 
 def test_minhash_threshold_applies_to_exact_jaccard(spark):

@@ -172,3 +172,20 @@ def test_size_bucketed_partitions_by_length(spark):
     out = size_bucketed(df, F.length("text"), bucket_width=1024, num_partitions=4)
     assert out.count() == 100
     assert "_size_bucket" not in out.columns
+
+
+def test_size_bucketed_gives_every_partition_an_even_share(spark):
+    """600 rows in two size buckets over 8 partitions: no partition is
+    empty and none holds more than 1.5x the mean; each partition is sorted
+    by size bucket."""
+    df = spark.createDataFrame(
+        [(f"doc{i}", "x" * (100 if i % 3 else 3000)) for i in range(600)],
+        "doc_id string, text string",
+    )
+    out = size_bucketed(df, F.length("text"), bucket_width=1024, num_partitions=8)
+    rows = out.select(F.spark_partition_id().alias("p"), F.length("text").alias("n")).collect()
+    sizes = [sum(1 for r in rows if r["p"] == p) for p in range(8)]
+    assert min(sizes) > 0 and max(sizes) <= 1.5 * 600 / 8, sizes
+    for p in range(8):
+        lengths = [r["n"] // 1024 for r in rows if r["p"] == p]
+        assert lengths == sorted(lengths)

@@ -1,5 +1,6 @@
 """The session's worker daemon: a reused Python worker re-reads a zip
-archive on `sys.path` only when the archive changed."""
+archive on `sys.path` only when the archive changed, and each task sets
+TCP_QUICKACK on its socket before it reads its input."""
 
 import os
 import zipfile
@@ -21,6 +22,56 @@ def test_workers_skip_unchanged_zip_rereads(spark):
 
     rows = spark.range(8).repartition(4).mapInPandas(report, "patched boolean").collect()
     assert [r["patched"] for r in rows] == [True] * 4
+
+
+def test_workers_ack_task_input_at_once(spark):
+    def report(batches):
+        import pyspark.daemon
+
+        import pandas as pd
+
+        wrapped = getattr(pyspark.daemon.worker, "acks_at_once", False)
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"wrapped": [wrapped]})
+
+    rows = spark.range(8).repartition(4).mapInPandas(report, "wrapped boolean").collect()
+    assert [r["wrapped"] for r in rows] == [True] * 4
+
+
+def test_ack_wrapper_sets_quickack_on_tcp_only(monkeypatch):
+    import socket
+
+    import pyspark.daemon
+
+    seen = []
+
+    def task(sock, authenticated):
+        if sock.family == socket.AF_UNIX:
+            seen.append("unix")
+        else:
+            seen.append(sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK))
+        return 0
+
+    monkeypatch.setattr(pyspark.daemon, "worker", task)
+    session.ack_task_input_at_once()
+    session.ack_task_input_at_once()  # installs once
+    assert pyspark.daemon.worker.acks_at_once
+    with socket.create_server(("127.0.0.1", 0)) as server:
+        with socket.create_connection(server.getsockname()) as client:
+            conn, _ = server.accept()
+            with conn:
+                # a worker that answered its last task delays its ACKs
+                client.sendall(b"task")
+                conn.recv(4)
+                conn.sendall(b"done")
+                client.recv(4)
+                assert conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK) == 0
+                assert pyspark.daemon.worker(conn, False) == 0
+    left, right = socket.socketpair(socket.AF_UNIX)
+    with left, right:
+        assert pyspark.daemon.worker(left, True) == 0
+    assert seen == [1, "unix"]
 
 
 def _write_zip(path, modules: dict[str, str]) -> None:
