@@ -100,7 +100,7 @@ def viterbi_score_col(toks_col):
     vecs = F.transform(hashes, emit_vec)
     init = F.zip_with(
         F.element_at(vecs, 1),
-        F.array(*[F.lit(START[s]).cast("long") for s in range(n_tags)]),
+        F.expr("array(" + ", ".join(f"{START[s]}L" for s in range(n_tags)) + ")"),
         lambda e, st: e + st,
     )
     rest = F.slice(vecs, 2, F.greatest(F.size(vecs) - 1, F.lit(0)))

@@ -324,10 +324,11 @@ def connected_components(
     """(src, dst) string edges -> (node, component = min node label).
 
     Hybrid execution: equivalence graphs are usually tiny relative to the
-    corpus (distinct near-duplicate surface pairs), so below
+    corpus (distinct near-duplicate surface pairs), so at or below
     `driver_threshold` edges we run union-find on the driver. One bounded
-    `limit(driver_threshold + 1).collect()` is both the size probe and the
-    edge list. Above the threshold, the distributed path is alternating
+    collect of at most `2 * driver_threshold + 1` directed rows (each edge
+    is two: both directions) is both the size probe and the edge list.
+    Above the threshold, the distributed path is alternating
     large-star/small-star (connected_components_star): O(log n) rounds on
     ANY graph shape, where min-label propagation needs O(diameter) rounds
     and crawls on chains. Both paths produce component = min node label,
@@ -340,8 +341,8 @@ def connected_components(
         # (and the single-pass explode halves that lineage vs a self-union)
         .localCheckpoint()
     )
-    rows = und.limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
+    rows = und.limit(2 * driver_threshold + 1).collect()
+    if len(rows) <= 2 * driver_threshold:
         return _driver_side_components(edges.sparkSession, rows)
     return connected_components_star(und, max_iter=max_iter)
 

@@ -116,19 +116,15 @@ def band_stack(
     sig = with_minhash_signature(
         base.select(id_col, "shingles"), "shingles", num_hashes
     )
-    band_keys = [
-        F.concat_ws(
-            "|",
-            F.lit(str(b)),
-            *[
-                F.col(f"mh{i}").cast("string")
-                for i in range(b * band_size, (b + 1) * band_size)
-            ],
-        )
-        for b in range(num_hashes // band_size)
-    ]
+
+    def band_key(b: int) -> str:
+        mhs = ", ".join(f"CAST(mh{i} AS STRING)" for i in range(b * band_size, (b + 1) * band_size))
+        return f"concat_ws('|', '{b}', {mhs})"
+
+    # one SQL string: one JVM call, not one per key component
+    band_keys = ", ".join(band_key(b) for b in range(num_hashes // band_size))
     return sig.select(
-        id_col, F.explode(F.array(*band_keys)).alias("band_key")
+        id_col, F.expr(f"explode(array({band_keys})) AS band_key")
     ).localCheckpoint(eager=False)
 
 

@@ -86,7 +86,8 @@ def negative_samples(
         "subj",
         "pred",
         "obj",
-        F.explode(F.array(*[F.lit(j) for j in range(k)])).alias("j"),
+        # j = 0..k-1 as one `sequence`; k < 1 samples nothing
+        F.explode(F.expr(f"sequence(0, {k - 1})") if k > 0 else F.array()).alias("j"),
     )
     h = F.conv(
         F.substring(

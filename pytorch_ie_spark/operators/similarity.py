@@ -15,6 +15,11 @@ Three paths:
 
 Embedding near-duplicate detection (cosine >= threshold within a block) is
 the embedding leg of the dedup family.
+
+The literal-heavy expressions (hyperplane sign bits, cosines against
+literal centroids) are built from SQL strings with `F.expr`, so their
+columns take one JVM call each instead of one per literal and lambda node;
+they name their input columns.
 """
 
 from __future__ import annotations
@@ -161,8 +166,10 @@ def hyperplane_weight(p: int, i: int) -> float:
     return 1.0 if hashlib.md5(f"{p}|{i}".encode()).hexdigest()[0] >= "8" else -1.0
 
 
-def hyperplane_signature_cols(vec_col, num_planes: int = 8, dim: int | None = None):
-    """Deterministic random-hyperplane sign bits (see `hyperplane_weight`).
+def hyperplane_signature_cols(vec_col: str, num_planes: int = 8, dim: int | None = None):
+    """Deterministic random-hyperplane sign bits of the double-array column
+    named `vec_col` (see `hyperplane_weight`): one int column bit{p} per
+    plane.
 
     The projection is computed on 1e6-quantized integer terms so the sign is
     exact and engine/order-independent (a float sum could flip a near-zero
@@ -171,36 +178,27 @@ def hyperplane_signature_cols(vec_col, num_planes: int = 8, dim: int | None = No
     When `dim` is known (any production embedding column has a fixed
     dimension) the weights are embedded as literal arrays — zero per-row
     hashing. Without `dim` the weights are derived in-plan per row; only
-    acceptable for ad-hoc inputs."""
+    acceptable for ad-hoc inputs. Each bit is one SQL string, as
+    `dedup._minhash_struct_col` is: one JVM call per plane, where a
+    Column-built fold costs one per literal and lambda node."""
 
-    def weights_col(p: int):
+    def weights_sql(p: int) -> str:
         if dim is not None:
-            return F.array(
-                *[F.lit(hyperplane_weight(p, i)) for i in range(dim)]
-            )
-        prefix = f"{p}|"
-        return F.transform(
-            F.sequence(F.lit(0), F.size(vec_col) - 1),
-            lambda i: F.when(
-                F.substring(F.md5(F.concat(F.lit(prefix), i.cast("string"))), 1, 1)
-                >= "8",
-                F.lit(1.0),
-            ).otherwise(F.lit(-1.0)),
+            return "array(" + ", ".join(f"{hyperplane_weight(p, i)}D" for i in range(dim)) + ")"
+        return (
+            f"transform(sequence(0, size(`{vec_col}`) - 1), "
+            f"i -> CASE WHEN substring(md5(concat('{p}|', CAST(i AS STRING))), 1, 1) >= '8' "
+            "THEN 1.0D ELSE -1.0D END)"
         )
 
-    def plane_bit(p: int):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                weights_col(p),
-                lambda x, w: F.round(x * w * 1000000.0, 0).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
+    return [
+        F.expr(
+            f"CASE WHEN aggregate(zip_with(`{vec_col}`, {weights_sql(p)}, "
+            "(x, w) -> CAST(round(x * w * 1000000.0D, 0) AS BIGINT)), 0L, (acc, v) -> acc + v) > 0 "
+            f"THEN 1 ELSE 0 END AS bit{p}"
         )
-        return F.when(proj > 0, F.lit(1)).otherwise(F.lit(0)).alias(f"bit{p}")
-
-    return [plane_bit(p) for p in range(num_planes)]
+        for p in range(num_planes)
+    ]
 
 
 def lsh_bucketed_ann(
@@ -218,7 +216,7 @@ def lsh_bucketed_ann(
         F.col(id_col).cast("long").alias("nid"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
-    bits = hyperplane_signature_cols(F.col("vec"), num_planes, dim=dim)
+    bits = hyperplane_signature_cols("vec", num_planes, dim=dim)
     sig = base.select("nid", "vec", F.concat_ws("", *bits).alias("bucket"))
     a = sig.select("bucket", F.col("nid").alias("query_id"), F.col("vec").alias("qvec"))
     b = sig.select(F.col("bucket").alias("bucket2"), F.col("nid").alias("neighbor_id"), "vec")
@@ -233,25 +231,33 @@ def lsh_bucketed_ann(
     )
 
 
-def _cos_to_literal(vec_col, cvec: list[float], vec_norm=None):
-    """Cosine of a vector column against a centroid embedded as a literal
-    array — same fold order as the in-table cosine so engines agree.
+def _cos_to_literal(vec_col: str, cvec: list[float], vec_norm: str | None = None):
+    """Cosine of the vector column named `vec_col` against a centroid
+    embedded as a literal array — same fold order as the in-table cosine
+    (`_dot`, `_norm`) so engines agree. One SQL string: one JVM call, not
+    one per centroid component.
 
     The centroid's norm is folded in Python at plan-build time with the
     same left-fold order as the HOF fold over the same IEEE doubles, so
     the literal is bit-identical while the per-row plan drops a 64-element
-    fold per centroid. `vec_norm` optionally supplies a precomputed
-    per-row norm column (again the same fold, computed once per row
-    rather than once per centroid)."""
+    fold per centroid. `vec_norm` optionally names a precomputed per-row
+    norm column (again the same fold, computed once per row rather than
+    once per centroid)."""
     import math
 
-    arr = F.array(*[F.lit(float(x)) for x in cvec])
+    arr = "array(" + ", ".join(f"{float(x)!r}D" for x in cvec) + ")"
     acc = 0.0
     for x in cvec:
         acc += float(x) * float(x)
-    cnorm = F.lit(math.sqrt(acc))
-    vn = vec_norm if vec_norm is not None else _norm(vec_col)
-    return _dot(vec_col, arr) / (vn * cnorm)
+    vn = (
+        f"`{vec_norm}`"
+        if vec_norm is not None
+        else f"sqrt(aggregate(`{vec_col}`, 0.0D, (acc, v) -> acc + v * v))"
+    )
+    return F.expr(
+        f"aggregate(zip_with(`{vec_col}`, {arr}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v) "
+        f"/ ({vn} * {math.sqrt(acc)!r}D)"
+    )
 
 
 def ivf_assign_broadcast(
@@ -324,7 +330,7 @@ def ivf_topk(
         for r in base.where(F.col("nid") < num_centroids).collect()
     )
     # struct(cos, -cid): array_max/array_sort order by cos, ties -> min cid
-    def scored_cents(vcol, norm_col):
+    def scored_cents(vcol: str, norm_col: str):
         return F.array(
             *[
                 F.struct(
@@ -339,7 +345,7 @@ def ivf_topk(
 
     assigned = base.withColumn(
         "centroid_id",
-        -F.array_max(scored_cents(F.col("vec"), F.col("nrm")))["negcid"],
+        -F.array_max(scored_cents("vec", "nrm"))["negcid"],
     ).localCheckpoint(eager=False)
     queries = assigned.where(
         F.col("nid").isin([int(q) for q in query_ids])
@@ -349,7 +355,7 @@ def ivf_topk(
         F.col("nrm").alias("qn"),
     )
     probe_arr = F.slice(
-        F.reverse(F.array_sort(scored_cents(F.col("qvec"), F.col("qn")))),
+        F.reverse(F.array_sort(scored_cents("qvec", "qn"))),
         1,
         nprobe,
     )

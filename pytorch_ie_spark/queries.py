@@ -1014,7 +1014,7 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dim=64 (the embeddings table's fixed dimension): the ±1 weights are
     # plan literals, not 512 md5 calls per row
-    bits = hyperplane_signature_cols(F.col("vec"), 8, dim=64)
+    bits = hyperplane_signature_cols("vec", 8, dim=64)
     sig = base.select("nid", F.concat_ws("", *bits).alias("bucket"))
     return sig.groupBy("bucket").agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
 
@@ -1136,7 +1136,7 @@ def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("long").alias("nid"),
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vec"),
     )
-    bits = hyperplane_signature_cols(F.col("vec"), 8, dim=64)
+    bits = hyperplane_signature_cols("vec", 8, dim=64)
     sig = base.select("nid", "vec", F.concat_ws("", *bits).alias("bucket"))
     return embedding_near_duplicates(
         sig, threshold=0.30, block_col="bucket", id_col="nid", vec_col="vec"

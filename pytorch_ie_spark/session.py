@@ -5,6 +5,23 @@ here is chosen to also be the right default on a 1000-executor cluster
 reading 100 TB (AQE on, adaptive coalescing, Arrow for all pandas UDF
 boundaries, sane shuffle partition count).
 
+PySpark's DataFrame origin capture is off
+(`spark.python.sql.dataFrameDebugging.enabled=false`). With it on, every
+`pyspark.sql.functions` call and Column operator made while a plan is
+built costs several extra JVM round trips (the active session, a conf read,
+setting and clearing the JVM's current origin) and an inspection of the
+Python stack. What an error message loses is the Python file and line in
+its `== DataFrame ==` context: an ANSI division by zero then says
+`"divide" was called from` a JVM reflection frame instead of
+`"__truediv__" was called from` the line that built the expression. The
+error class and message are unchanged. Pass
+`extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}` to
+get the Python call site back.
+
+The driver heap defaults to half the machine's physical memory in whole
+GB, between 1g and 48g (`default_driver_memory`);
+`SPARK_GRAFT_DRIVER_MEM` or `extra_conf` override it.
+
 The session's Python worker daemon is this module run as `__main__` (see
 the bottom of the file): it keeps a reused worker from re-reading
 PySpark's unchanged zip archives on every task, and from delaying the
@@ -17,6 +34,7 @@ import os
 import socket
 import zipimport
 
+import pyspark.errors.utils
 from pyspark.sql import SparkSession
 
 # At cluster scale shuffle partitions should track total cores (2-3x);
@@ -25,6 +43,17 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 #: the directory that holds the package
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """Half of `physical_bytes` (default: this machine's RAM) in whole GB,
+    at least 1g and at most 48g. In local mode the driver JVM also runs the
+    tasks, and the Python workers and the OS need the other half: a heap
+    larger than the machine ends in the kernel killing the JVM, not in a
+    Spark error."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, physical_bytes // 2 // 2**30))}g"
 
 
 def get_spark(
@@ -49,7 +78,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", __spec__.name)
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(dict.fromkeys(filter(None, worker_path))))
@@ -59,6 +89,9 @@ def get_spark(
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # PySpark reads the debugging conf once per process, and a `functions`
+    # call made before any session existed has already cached it as off
+    pyspark.errors.utils._enable_debugging_cache = None
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

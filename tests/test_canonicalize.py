@@ -102,6 +102,22 @@ def test_component_label_is_min_member(spark, driver_threshold):
         assert c == min(n for n, l in label.items() if l == c)
 
 
+def test_driver_threshold_counts_edges(spark):
+    """`driver_threshold` counts edges, not the two directed rows of each:
+    N edges take the driver path (a LocalRelation), N + 1 the star path."""
+    n = 5
+    chain = [(f"v{i}", f"v{i + 1}") for i in range(n + 1)]
+
+    def plan(rows):
+        edges = spark.createDataFrame(rows, "src string, dst string")
+        comps = connected_components(edges, driver_threshold=n)
+        assert {r["component"] for r in comps.collect()} == {"v0"}
+        return comps._jdf.queryExecution().analyzed().toString()
+
+    assert "LocalRelation" in plan(chain[:n])
+    assert "LocalRelation" not in plan(chain)
+
+
 def test_driver_side_components_is_a_local_relation(spark):
     """The driver-side component map plans as a LocalRelation (Arrow-built),
     not a pickled Python RDD, with or without edges."""

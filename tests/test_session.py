@@ -106,3 +106,11 @@ def test_invalidate_caches_rereads_only_a_changed_archive(tmp_path, monkeypatch)
     # importer re-read
     other.invalidate_caches()
     assert other.find_spec("newmod") is not None
+
+
+def test_default_driver_memory_is_a_bounded_share_of_ram():
+    gb = 2**30
+    assert session.default_driver_memory(15 * gb) == "7g"
+    assert session.default_driver_memory(512 * gb) == "48g"
+    assert session.default_driver_memory(gb) == "1g"
+    assert session.default_driver_memory() in {f"{n}g" for n in range(1, 49)}

@@ -97,7 +97,7 @@ def test_ivf_broadcast_assignment_matches_literal(spark):
     scored = F.array(
         *[
             F.struct(
-                _cos_to_literal(F.col("vec"), cv).alias("cos"),
+                _cos_to_literal("vec", cv).alias("cos"),
                 F.lit(-cid).cast("long").alias("negcid"),
             )
             for cid, cv in cents
